@@ -33,14 +33,29 @@ Scale posture (100 TB corpus, k in the hundreds):
   combine reduces to k·dim rows crossing the wire per iteration;
 - per-iteration state is the k×dim centroid frame — metadata-class;
   the quantized point set is cached once and reused every iteration;
-- iterations compose lazily; for long runs pass ``checkpoint_every``
-  to truncate lineage (the graph.py discipline — short runs must not
-  pay per-iteration block-storage materialization).
+- iterations compose lazily through the shared fixed-point loop
+  (``operators/_fixpoint.py``) with no per-round checkpoint: measured
+  in round 13, per-iteration centroid localCheckpoints cut the Spark
+  JOB count (each iteration's broadcast subtree nests every earlier
+  one: q142 31→21 jobs) but RAISE wall time (q142 2.35→3.22 s, q192
+  2.00→2.17 s min-of-5) — the k-row block materializations serialize
+  on block-store latency while the nested broadcast recompute is
+  pipelined codegen over the cached point set.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from . import _fixpoint as fx
+
+
+def _quantize(vec_col: str, quant: int) -> Column:
+    """Integer components ``floor(double(x) * quant)`` — exact on any
+    IEEE engine (see the module determinism contract)."""
+    return F.expr(
+        f"transform({vec_col}, x -> cast(floor(cast(x as double) * {quant}) as bigint))"
+    ).alias("qv")
 
 
 def kmeans_fixedpoint(
@@ -51,7 +66,6 @@ def kmeans_fixedpoint(
     quant: int = 1_000_000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """Lloyd's k-means in exact integer arithmetic; returns the final
     assignment ``(pid, cluster, d2)`` — one row per input vector,
@@ -60,23 +74,8 @@ def kmeans_fixedpoint(
 
     ``iters`` centroid updates are performed, then one final
     assignment against the last centroids (assign → update ×iters →
-    assign).
-
-    ``checkpoint_every`` stays 0 by default — measured in round 13:
-    per-iteration centroid localCheckpoints cut the Spark JOB count
-    (each iteration's broadcast subtree nests every earlier one, so
-    truncation stops the nested re-runs: q142 31→21 jobs) but RAISE
-    wall time (q142 2.35→3.22 s, q192 2.00→2.17 s min-of-5): the k-row
-    block materializations serialize on block-store latency while the
-    nested broadcast recompute is pipelined codegen over the cached
-    point set. Pass a positive value only for long fixed-point runs
-    where lineage depth itself becomes the problem."""
-    pts = emb.select(
-        F.col(id_col).alias("pid"),
-        F.expr(
-            f"transform({vec_col}, x -> cast(floor(cast(x as double) * {quant}) as bigint))"
-        ).alias("qv"),
-    ).cache()
+    assign)."""
+    pts = emb.select(F.col(id_col).alias("pid"), _quantize(vec_col, quant)).cache()
 
     # seeds: the k lowest-id vectors, numbered 0..k-1 in id order —
     # a TakeOrdered of k rows, then a window over those k rows only
@@ -86,14 +85,10 @@ def kmeans_fixedpoint(
         F.col("qv").alias("cv"),
     )
 
-    cent = _lloyd_centroids(pts, cent, iters, checkpoint_every)
+    cent = _lloyd_centroids(pts, cent, iters)
 
-    # force the |n|-row assignment once, then release the cached point
-    # set so repeated calls in a long-lived session don't accumulate
-    # storage (the pagerank_fixedpoint discipline)
-    out = _assign(pts, cent).select("pid", "cluster", "d2").localCheckpoint(eager=True)
-    pts.unpersist()
-    return out
+    # force the |n|-row assignment once, then release the cached point set
+    return fx.finish(_assign(pts, cent).select("pid", "cluster", "d2"), pts)
 
 
 def _all_distances(pts: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -129,12 +124,11 @@ def _assign(pts: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def _lloyd_centroids(
-    pts: DataFrame, cent: DataFrame, iters: int, checkpoint_every: int = 0
-) -> DataFrame:
+def _lloyd_centroids(pts: DataFrame, cent: DataFrame, iters: int) -> DataFrame:
     """``iters`` exact-integer Lloyd centroid updates (see module
     docstring for the determinism contract)."""
-    for it in range(iters):
+
+    def update(cent: DataFrame) -> DataFrame:
         assigned = _assign(pts, cent)
         sums = (
             assigned.select("cluster", F.posexplode("qv").alias("pos", "v"))
@@ -155,13 +149,11 @@ def _lloyd_centroids(
                 ).alias("cv_new")
             )
         )
-        cent = (
-            cent.join(new_cent, "cid", "left")
-            .select("cid", F.coalesce("cv_new", "cv").alias("cv"))
+        return cent.join(new_cent, "cid", "left").select(
+            "cid", F.coalesce("cv_new", "cv").alias("cv")
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and (it + 1) < iters:
-            cent = cent.localCheckpoint(eager=False)
-    return cent
+
+    return fx.iterate(cent, update, iters, every=0)
 
 
 def kmeans_separation(
@@ -190,12 +182,7 @@ def kmeans_separation(
     centroids), one groupBy(pid) then one groupBy(cluster) — no extra
     corpus pass beyond the fit. The oracle re-runs the unrolled Lloyd
     chain and reads best/second-best as row_number 1 and 2."""
-    pts = emb.select(
-        F.col(id_col).alias("pid"),
-        F.expr(
-            f"transform({vec_col}, x -> cast(floor(cast(x as double) * {quant}) as bigint))"
-        ).alias("qv"),
-    ).cache()
+    pts = emb.select(F.col(id_col).alias("pid"), _quantize(vec_col, quant)).cache()
     seeds = pts.orderBy("pid").limit(k)
     cent = seeds.select(
         (F.row_number().over(Window.orderBy("pid")) - 1).alias("cid"),
@@ -231,10 +218,8 @@ def kmeans_separation(
             ).alias("separation"),
         )
         .orderBy("cluster")
-        .localCheckpoint(eager=True)
     )
-    pts.unpersist()
-    return out
+    return fx.finish(out, pts)
 
 
 def kcenter_sample(
@@ -272,12 +257,8 @@ def kcenter_sample(
     k-center objective value)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    pts = emb.select(
-        F.col(id_col).alias("pid"),
-        F.expr(
-            f"transform({vec_col}, x -> cast(floor(cast(x as double) * {quant}) as bigint))"
-        ).alias("qv"),
-    ).localCheckpoint(eager=False)
+    pts = emb.select(F.col(id_col).alias("pid"), _quantize(vec_col, quant))
+    pts = pts.localCheckpoint(eager=False)
 
     seed = pts.orderBy("pid").first()
     if seed is None:

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from . import _fixpoint as fx
 from .text import normalize_text
 
 
@@ -492,40 +493,22 @@ def connected_components(
     labels = edges.select(F.col("s").alias("node")).distinct().withColumn(
         "cluster_id", F.col("node")
     )
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges.t == labels.node)
             .groupBy("s")
             .agg(F.min("cluster_id").alias("nbr_min"))
         )
-        # LAZY checkpoint + fused convergence count (round-14, guide
-        # §1.2 step 1): the count action is the job that materializes
-        # the round's checkpoint blocks, so one job per round computes
-        # the join ONCE, stores it, and reads the flag — the round-13
-        # eager form paid a separate materialization job before the
-        # count (2 jobs/round), and the round-12 count-then-checkpoint
-        # form computed the join twice.
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.s, "left")
-            .select(
-                "node",
-                F.least(F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))).alias(
-                    "new_cluster"
-                ),
-                (
-                    F.col("cluster_id")
-                    != F.least(
-                        F.col("cluster_id"),
-                        F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-                    )
-                ).alias("__changed"),
-            )
-            .localCheckpoint(eager=False)
+        new = F.least(F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id")))
+        return labels.join(neighbor_min, labels.node == neighbor_min.s, "left").select(
+            "node", new.alias("cluster_id"), (F.col("cluster_id") != new).alias("__changed")
         )
-        changed = updated.where(F.col("__changed")).count()
-        labels = updated.select("node", F.col("new_cluster").alias("cluster_id"))
-        if changed == 0:
-            return labels
+
+    # lazy checkpoint + fused convergence count: one job per round
+    labels = fx.converge(labels, step, max_iter, changed="__changed")
+    if labels is not None:
+        return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} iterations "
         "(component diameter exceeds max_iter) — raise max_iter; returning "
@@ -1035,7 +1018,9 @@ def semdedup(
         emb, k=k, iters=iters, quant=quant, id_col=id_col, vec_col=vec_col
     ).select("pid", "cluster")
     vecs = emb.select(F.col(id_col).alias("pid"), as_double(vec_col).alias("__v"))
-    pts = asg.join(vecs, "pid").cache()  # consumed by both pair sides + output
+    # consumed by both pair sides + output: a lazy checkpoint computes
+    # the join once and, unlike a cache, leaves no CacheManager entry
+    pts = asg.join(vecs, "pid").localCheckpoint(eager=False)
     a = pts.select(
         F.col("pid").alias("id_a"), "cluster", F.col("__v").alias("__va")
     )
@@ -1304,7 +1289,7 @@ def coverage_greedy_selection(
     outside the pool on both engines. No floats anywhere.
 
     Scale shape: the shingle frame is built once and localCheckpointed
-    (the pagerank_fixedpoint loop rule — graph.py:21); each round is
+    (the lazy-checkpoint rule of ``operators/_fixpoint.py``); each round is
     one anti-join against the covered set + one map-side-combinable
     groupBy + a TakeOrdered(1), and the covered set is re-checkpointed
     per round so the k-step lineage never re-derives earlier rounds.

@@ -1,5 +1,5 @@
 """Iterative graph algorithms as DataFrame loops (north-star extension;
-same family as dedup.connected_components, dedup.py:185).
+same family as dedup.connected_components).
 
 PageRank here is FIXED-POINT INTEGER PageRank: ranks live in integer
 pico-units of total mass 1.0 (``SCALE`` = 10^12) and every step uses
@@ -18,11 +18,10 @@ Scale posture (100 TB / 10^9-node graphs):
 - each iteration is therefore one |V| shuffle + one aggregation keyed
   on dst — O(|E|) scan work off the cache, no driver data motion;
 - rank state is one row per node (|V|, not |E|);
-- ``localCheckpoint`` every ``checkpoint_every`` iterations truncates
-  lineage so the plan stays O(K) however long the fixed-point runs
-  (the connected-components idiom), without paying per-iteration
-  block-storage materialization on short runs;
-- the single ``nodes.count()`` is quantizer-class metadata (one
+- the round loop, its lineage-truncating ``localCheckpoint`` cadence
+  and the end-of-run force + cache release are the shared fixed-point
+  loop (``operators/_fixpoint.py``), used by every loop in this module;
+- the single fused setup count is quantizer-class metadata (one
   scalar), used only to size the teleport constant.
 
 Dangling nodes (no out-edges) leak their mass — the standard "leaky"
@@ -32,9 +31,19 @@ set (as q109 does), which guarantees every node has out-degree ≥ 1.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
+from . import _fixpoint as fx
+
 SCALE = 1_000_000_000_000  # pico-units: sum of initial ranks == SCALE
+
+# PageRank lineage is truncated every 4 rounds, not every round: on the
+# q109 trade graph (sf0.1, min-of-3) a per-round localCheckpoint cost
+# 12.1 s wall vs 4.0 s without — each one writes the |V| frame to block
+# storage, and on a 3-round run that storage traffic IS the query.
+_PAGERANK_CHECKPOINT_EVERY = 4
 
 
 def pagerank_fixedpoint(
@@ -44,90 +53,21 @@ def pagerank_fixedpoint(
     dst: str = "dst",
     iters: int = 3,
     damping_pct: int = 85,
-    checkpoint: bool = True,
-    checkpoint_every: int = 4,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """Fixed-point PageRank: pr_{k+1}(v) = teleport + (d·Σ_{u→v} pr_k(u) div deg(u)) div 100
     with teleport = ((100−d)·(SCALE div N)) div 100, all in BIGINT floor
     division. Returns (node, pr) — pr in pico-units.
 
+    This is ``personalized_pagerank`` with every node a source: the
+    source flag is the constant true, so no membership join is added.
+
     ``assume_distinct=True`` skips the defensive edge dedup (one full
     |E| shuffle) when the caller guarantees edge uniqueness — e.g. it
-    built the edge set from a ``.distinct()`` pair frame, as q109 does.
-
-    ``checkpoint_every``: lineage is truncated every K iterations, not
-    every iteration. Measured on the q109 trade graph (sf0.1, min-of-3):
-    per-iteration localCheckpoint costs 12.1 s wall vs 4.0 s without —
-    each checkpoint materializes the |V| frame to block storage, and on
-    a 3-iteration run that storage traffic IS the query. A depth-K
-    lineage (K·2 joins + K aggs) is well inside Catalyst's comfort
-    zone, so checkpoint only when the plan would otherwise grow
-    unbounded (long fixed-point runs), and always force+release at the
-    end. The 100 TB posture is unchanged: plan size is O(K), executor
-    storage holds at most one checkpointed |V| frame per K iterations."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
-    # Transient edge cache: nodes, outdeg and fanout all consume the
-    # (possibly expensive) upstream edge plan — without this cache each
-    # build re-runs it from the source. It is released as soon as the
-    # durable frames are forced, so peak extra storage is one |E| pass
-    # during setup, not for the iteration phase.
-    e = e.cache()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .cache()
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # (src, dst, deg) built once, hash-partitioned on the probe key and
-    # cached: the per-iteration join then re-shuffles only the rank
-    # frame (|V| rows) — the cached scan keeps its HashPartitioning.
-    fanout = e.join(outdeg, "src").repartition("src").cache()
-
-    # ONE fused setup action (round-14, verdict 3a): nodes rows carry
-    # flag 1 and fanout rows flag 0, so the sum IS |V| while the scan
-    # forces BOTH caches in a single job — the two-action form
-    # (nodes.count() then fanout.count()) paid an extra job for the
-    # same passes.  Cache lifetime unchanged: e is dropped immediately
-    # after, exactly as before.
-    n_nodes = (
-        nodes.select(F.lit(1).cast("bigint").alias("__f"))
-        .unionByName(fanout.select(F.lit(0).cast("bigint").alias("__f")))
-        .agg(F.sum("__f"))
-        .collect()[0][0]
-    )
-    e.unpersist()
-    base = SCALE // n_nodes
-    teleport = ((100 - damping_pct) * base) // 100
-
-    pr = nodes.withColumn("pr", F.lit(base).cast("bigint"))
-    for k in range(iters):
-        contrib = (
-            fanout.join(pr, fanout["src"] == pr["node"])
-            .select(F.col("dst"), F.expr("pr div deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("recv"))
-        )
-        pr = nodes.join(contrib, nodes["node"] == contrib["dst"], "left").select(
-            "node",
-            (
-                F.lit(teleport)
-                + F.expr(f"({damping_pct} * coalesce(recv, 0L)) div 100")
-            ).cast("bigint").alias("pr"),
-        )
-        if checkpoint and checkpoint_every and (k + 1) % checkpoint_every == 0 and (k + 1) < iters:
-            pr = pr.localCheckpoint(eager=False)
-    if checkpoint:
-        # force the final frame once, then release executor storage so
-        # repeated calls in a long-lived session (bench loops, notebook
-        # reuse) don't accumulate cached blocks.
-        pr = pr.localCheckpoint(eager=True)
-        nodes.unpersist()
-        fanout.unpersist()
-    return pr
+    built the edge set from a ``.distinct()`` pair frame, as q109 does."""
+    e = fx.edge_frame(edges, src, dst, assume_distinct=assume_distinct).cache()
+    nodes = fx.node_set(e).withColumn("__is_src", F.lit(True))
+    return _pagerank(e, nodes, iters, damping_pct)
 
 
 def personalized_pagerank(
@@ -138,8 +78,6 @@ def personalized_pagerank(
     dst: str = "dst",
     iters: int = 3,
     damping_pct: int = 85,
-    checkpoint: bool = True,
-    checkpoint_every: int = 4,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """Personalized (topic-sensitive) PageRank: identical fixed-point
@@ -153,36 +91,36 @@ def personalized_pagerank(
                       + (d·Σ_{u→v} pr_k(u) div deg(u)) div 100
 
     All floor division ⇒ an unrolled SQL oracle value-hash-checks the
-    iterative run (the q109 argument). Scale shape matches the global
-    variant: the fanout frame is built/cached once, each iteration
-    shuffles only |V| rank rows, the source membership flag rides the
-    cached nodes frame (one hash join at build time, zero per
+    iterative run (the q109 argument). The source membership flag rides
+    the cached nodes frame (one hash join at build time, zero per
     iteration). Isolated seeds (sources with no edges) keep their
     teleport mass — they are unioned into the node set."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
-    e = e.cache()
+    e = fx.edge_frame(edges, src, dst, assume_distinct=assume_distinct).cache()
     s = sources.select(F.col(sources.columns[0]).alias("node")).distinct()
     nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .union(s)
-        .distinct()
+        fx.node_set(e, s)
         .join(s.withColumn("__is_src", F.lit(True)), "node", "left")
         .select("node", F.coalesce("__is_src", F.lit(False)).alias("__is_src"))
-        .cache()
     )
+    return _pagerank(e, nodes, iters, damping_pct)
+
+
+def _pagerank(e: DataFrame, nodes: DataFrame, iters: int, damping_pct: int) -> DataFrame:
+    """The shared PageRank core over the cached edge frame ``e`` and a
+    (node, __is_src) frame; releases ``e`` after setup and every other
+    cache on return."""
+    nodes = nodes.cache()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    # (src, dst, deg) built once, hash-partitioned on the probe key and
+    # cached: the per-iteration join then re-shuffles only the rank
+    # frame (|V| rows) — the cached scan keeps its HashPartitioning.
     fanout = e.join(outdeg, "src").repartition("src").cache()
 
-    # ONE fused setup action (round-14, verdict 3a): |S| is the sum of
-    # the __is_src flags riding the nodes frame, so a union-agg scan
-    # returns the constant AND forces nodes + fanout in a single job.
-    # This also fixes a latent recompute: the old form (s.count() +
-    # fanout.count()) never forced the NODES cache before dropping the
-    # edge cache, so nodes materialized at iteration 1 by re-running
-    # the edge dedup from source.
+    # ONE fused setup action: |S| is the sum of the __is_src flags
+    # riding the nodes frame, so a union-agg scan returns the constant
+    # AND forces nodes + fanout in a single job before the transient
+    # edge cache is dropped (peak extra storage: one |E| pass during
+    # setup, none during the iterations).
     n_src = (
         nodes.select(F.col("__is_src").cast("bigint").alias("__f"))
         .unionByName(fanout.select(F.lit(0).cast("bigint").alias("__f")))
@@ -194,31 +132,26 @@ def personalized_pagerank(
     teleport = ((100 - damping_pct) * base) // 100
     tel_col = F.when(F.col("__is_src"), F.lit(teleport)).otherwise(F.lit(0))
 
-    pr = nodes.withColumn(
-        "pr", F.when(F.col("__is_src"), F.lit(base)).otherwise(F.lit(0)).cast("bigint")
-    ).select("node", "__is_src", "pr")
-    for k in range(iters):
+    def step(pr: DataFrame) -> DataFrame:
         contrib = (
             fanout.join(pr, fanout["src"] == pr["node"])
             .select(F.col("dst"), F.expr("pr div deg").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("recv"))
         )
-        pr = nodes.join(contrib, nodes["node"] == contrib["dst"], "left").select(
+        return nodes.join(contrib, nodes["node"] == contrib["dst"], "left").select(
             "node",
             "__is_src",
             (
                 tel_col + F.expr(f"({damping_pct} * coalesce(recv, 0L)) div 100")
             ).cast("bigint").alias("pr"),
         )
-        if checkpoint and checkpoint_every and (k + 1) % checkpoint_every == 0 and (k + 1) < iters:
-            pr = pr.localCheckpoint(eager=False)
-    pr = pr.select("node", "pr")
-    if checkpoint:
-        pr = pr.localCheckpoint(eager=True)
-        nodes.unpersist()
-        fanout.unpersist()
-    return pr
+
+    pr = nodes.withColumn(
+        "pr", F.when(F.col("__is_src"), F.lit(base)).otherwise(F.lit(0)).cast("bigint")
+    ).select("node", "__is_src", "pr")
+    pr = fx.iterate(pr, step, iters, every=_PAGERANK_CHECKPOINT_EVERY)
+    return fx.finish(pr.select("node", "pr"), nodes, fanout)
 
 
 def triangle_count(
@@ -400,9 +333,7 @@ def bfs_levels(
     rounds as CTEs and value-hash-match (the q109/q142 contract).
 
     Returns (node, hop), hop in [0, max_hops]."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
+    e = fx.edge_frame(edges, src, dst, assume_distinct=assume_distinct)
     e = e.repartition("src").cache()
 
     frontier = sources.select(F.col(sources.columns[0]).alias("node")).distinct()
@@ -418,9 +349,7 @@ def bfs_levels(
         )
         visited = visited.union(nxt.withColumn("hop", F.lit(k).cast("int")))
         frontier = nxt
-    out = visited.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    return fx.finish(visited, e)
 
 
 def kcore_peel(
@@ -451,18 +380,15 @@ def kcore_peel(
     ``converged`` means the bounded peel already reached the true
     k-core.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
-    e = e.localCheckpoint(eager=False)
-    for _ in range(rounds):
+    def peel(e: DataFrame) -> DataFrame:
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.where(F.col("deg") >= k).select(F.col("src").alias("node"))
-        e = (
-            e.join(keep.withColumnRenamed("node", "src"), "src", "semi")
-            .join(keep.withColumnRenamed("node", "dst"), "dst", "semi")
-            .localCheckpoint(eager=False)
+        return e.join(keep.withColumnRenamed("node", "src"), "src", "semi").join(
+            keep.withColumnRenamed("node", "dst"), "dst", "semi"
         )
+
+    e = fx.edge_frame(edges, src, dst, assume_distinct=assume_distinct)
+    e = fx.iterate(e.localCheckpoint(eager=False), peel, rounds)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     return deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
@@ -505,16 +431,9 @@ def hits_quotient(
     (node, hub, auth) over all nodes, zero-filled."""
     if iters < 1:
         raise ValueError("hits_quotient needs iters >= 1 (no authority scores exist before the first half-step)")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
+    e = fx.edge_frame(edges, src, dst, assume_distinct=assume_distinct)
     e = e.localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = fx.node_set(e).localCheckpoint(eager=False)
     n = nodes.count()  # metadata scalar: sizes the initial mass only
     h = nodes.select("node", F.lit(SCALE // max(n, 1)).alias("s"))
     a = None
@@ -582,9 +501,7 @@ def label_propagation(
     Per round: one |E| join keyed on dst + two aggregations; the label
     frame (|V| rows) is localCheckpointed per round; isolated nodes
     keep their own label via the left join. Returns (node, label)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
+    e = fx.edge_frame(edges, src, dst, assume_distinct=assume_distinct)
     # hash-partition the edge frame on the per-round join key and CACHE
     # it (round-14, verdict 3b — the pagerank cached-fanout idiom): an
     # InMemoryTableScan preserves its HashPartitioning, so at cluster
@@ -593,21 +510,14 @@ def label_propagation(
     # NOT work here: a checkpointed RDD scans as UnknownPartitioning —
     # measured, the SMJ re-shuffled both sides.)  Locally the |V| side
     # broadcasts either way; the one extra setup exchange replaces
-    # iters×|E| exchanges at scale.  The cache is dropped after the
-    # final labels are eagerly materialized below.
+    # iters×|E| exchanges at scale.  The cache is released once the
+    # final labels are forced.
     e = e.repartition("dst").cache()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    lab = nodes.select("node", F.col("node").alias("label"))
-    for _ in range(iters):
+    nodes = fx.node_set(e).localCheckpoint(eager=False)
+
+    def step(lab: DataFrame) -> DataFrame:
         nb = (
-            e.join(
-                lab.select(F.col("node").alias("dst"), "label"), "dst"
-            )
+            e.join(lab.select(F.col("node").alias("dst"), "label"), "dst")
             .groupBy(F.col("src").alias("node"), "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
@@ -616,20 +526,12 @@ def label_propagation(
             .agg(F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("b"))
             .select("node", (-F.col("b.nl")).alias("label"))
         )
-        lab = (
-            nodes.join(best, "node", "left")
-            .select(
-                "node",
-                F.coalesce("label", F.col("node")).cast("bigint").alias("label"),
-            )
-            .localCheckpoint(eager=False)
+        return nodes.join(best, "node", "left").select(
+            "node", F.coalesce("label", F.col("node")).cast("bigint").alias("label")
         )
-    # force the final frame once, then release the edge cache (the
-    # pagerank lifecycle: repeated calls in a long-lived session must
-    # not accumulate cached |E| blocks)
-    lab = lab.localCheckpoint(eager=True)
-    e.unpersist()
-    return lab
+
+    lab = fx.iterate(nodes.select("node", F.col("node").alias("label")), step, iters)
+    return fx.finish(lab, e)
 
 
 def degree_assortativity(
@@ -656,9 +558,7 @@ def degree_assortativity(
     back onto the edge list, one global 5-sum aggregate — all linear,
     no windows. Returns one row (n_edges, assortativity); NULL
     coefficient when a degree side is constant (zero variance)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
+    e = fx.edge_frame(edges, src, dst, assume_distinct=assume_distinct)
     outd = e.groupBy("src").agg(F.count(F.lit(1)).alias("__dx"))
     ind = e.groupBy("dst").agg(F.count(F.lit(1)).alias("__dy"))
     j = e.join(outd, "src").join(ind, "dst")
@@ -776,38 +676,36 @@ def temporal_reachability(
     arr = sources.select(
         F.col(sources.columns[0]).alias("node"), F.lit(0).cast("bigint").alias("arr")
     ).distinct()
-    stats = []
-    for rnd in range(1, max_hops + 1):
-        relax = (
+
+    def relax(arr: DataFrame) -> DataFrame:
+        reached = (
             arr.join(e, arr.node == e.__s)
             .where(F.col("__t") >= F.col("arr"))
             .select(F.col("__d").alias("node"), F.col("__t").alias("arr"))
         )
-        arr = (
-            arr.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("arr").alias("arr"))
-            .localCheckpoint(eager=False)
+        return arr.unionByName(reached).groupBy("node").agg(F.min("arr").alias("arr"))
+
+    stats = [
+        arr.agg(
+            F.lit(rnd).alias("round"),
+            F.count(F.lit(1)).cast("bigint").alias("n_reached"),
+            F.min("arr").cast("bigint").alias("min_arrival"),
+            F.max("arr").cast("bigint").alias("max_arrival"),
+            F.sum(F.col("arr").cast("decimal(38,0)")).alias("sum_arrival"),
         )
-        stats.append(
-            arr.agg(
-                F.lit(rnd).alias("round"),
-                F.count(F.lit(1)).cast("bigint").alias("n_reached"),
-                F.min("arr").cast("bigint").alias("min_arrival"),
-                F.max("arr").cast("bigint").alias("max_arrival"),
-                F.sum(F.col("arr").cast("decimal(38,0)")).alias("sum_arrival"),
-            )
-        )
-    out = stats[0]
-    for s in stats[1:]:
-        out = out.unionByName(s)
-    return out.select(
+        for rnd, arr in enumerate(fx.rounds(arr, relax, max_hops), 1)
+    ]
+    out = reduce(DataFrame.unionByName, stats).select(
         "round",
         "n_reached",
         "min_arrival",
         "max_arrival",
         F.col("sum_arrival").cast("double").alias("sum_arrival"),
     ).orderBy("round")
+    # every stage that reads the edge cache ran while the rounds were
+    # checkpointed; the wavefront aggregates read only checkpointed
+    # blocks, so the cache is released without forcing the output
+    return fx.finish(out, e, force=False)
 
 
 def weighted_sssp(
@@ -855,20 +753,14 @@ def weighted_sssp(
     dist = sources.select(
         F.col(sources.columns[0]).alias("node"), F.lit(0).cast("bigint").alias("dist")
     ).distinct()
-    for _ in range(max_hops):
-        relax = (
-            dist.join(e, dist.node == e.__s)
-            .select(F.col("__d").alias("node"), (F.col("dist") + F.col("__w")).alias("dist"))
+
+    def relax(dist: DataFrame) -> DataFrame:
+        reached = dist.join(e, dist.node == e.__s).select(
+            F.col("__d").alias("node"), (F.col("dist") + F.col("__w")).alias("dist")
         )
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    out = dist.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+        return dist.unionByName(reached).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    return fx.finish(fx.iterate(dist, relax, max_hops), e)
 
 
 def modularity(

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from . import _fixpoint as fx
+
 
 def frequent_pairs(
     df: DataFrame,
@@ -1198,16 +1200,17 @@ def _stationary_frameloop(
     pi = states.crossJoin(F.broadcast(n_states)).select(
         "state", (F.lit(1.0) / F.col("__k").cast("double")).alias("pi")
     )
-    prev = pi
-    for _ in range(iterations):
-        prev = pi
-        pi = (
+
+    def step(pi: DataFrame) -> DataFrame:
+        return (
             edges.join(pi.withColumnRenamed("state", "__i"), "__i")
             .groupBy(F.col("__j").alias("state"))
             .agg(F.sum(dec(F.col("pi") * F.col("__p"))).alias("__acc"))
             .select("state", F.col("__acc").cast("double").alias("pi"))
-            .localCheckpoint(eager=False)
         )
+
+    # the last two states (both the initial one when iterations == 0)
+    *_, prev, pi = [pi, pi, *fx.rounds(pi, step, iterations)]
     # full outer + coalesce: a state with no incoming edges leaves the
     # pi frame (its mass is exactly 0) — the delta must still count it
     delta = (

@@ -42,7 +42,15 @@ def test_pagerank_matches_integer_reference(spark):
         r["node"]: r["pr"]
         for r in graph.pagerank_fixedpoint(df, iters=3).collect()
     }
-    assert got == _pagerank_reference(edges, iters=3)
+    ref = _pagerank_reference(edges, iters=3)
+    assert got == ref
+    # global PageRank is personalized PageRank with every node a source
+    every_node = spark.createDataFrame([(v,) for v in ref], ["node"])
+    ppr = {
+        r["node"]: r["pr"]
+        for r in graph.personalized_pagerank(df, every_node, iters=3).collect()
+    }
+    assert ppr == ref
 
 
 def test_pagerank_symmetric_graph_conserves_mass(spark):

@@ -1,7 +1,7 @@
 """Per-query profiler for the optimization rounds (guide §1: measure
 first).  For each named query (default: the top-N slowest from the
-latest BENCH_DETAIL), runs the same timed action as bench.py
-(``.count()``) after a warm-up pass, and records:
+latest BENCH_DETAIL), runs a warm-up pass and then times the full
+result through a ``noop`` sink, and records:
 
 - wall seconds (min of N passes, same estimator as bench.py),
 - the number of Spark JOBS the query triggers (statusTracker job ids
@@ -10,6 +10,11 @@ latest BENCH_DETAIL), runs the same timed action as bench.py
   first-order cost model,
 - the number of stages across those jobs (each extra stage ≈ one
   shuffle boundary or retry).
+
+The action is ``df.write.format("noop")`` in both the warm-up and the
+timed passes: every output column is forced, so Catalyst cannot prune
+aggregate expressions the way a ``.count()`` lets it, and the job
+counts come from the plan a consumer of the whole result runs.
 
 Usage: python tools/profile_queries.py [sf_dir] [q... | -n TOPN]
 Output: one JSON line per query to stdout + a summary table.
@@ -23,6 +28,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _force(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -70,7 +79,7 @@ def main() -> None:
     warm = "/root/testdata/sf0.001"
     for n in names:
         try:
-            qs[n](spark, warm).count()
+            _force(qs[n](spark, warm))
         except Exception as e:  # noqa: BLE001
             print(f"WARN warmup {n}: {type(e).__name__}: {e}", file=sys.stderr)
 
@@ -81,7 +90,7 @@ def main() -> None:
             group = f"prof_{n}_{p}"
             sc.setJobGroup(group, n)
             t0 = time.perf_counter()
-            qs[n](spark, sf_dir).count()
+            _force(qs[n](spark, sf_dir))
             dt = time.perf_counter() - t0
             sc.setJobGroup(None, None)
             job_ids = tracker.getJobIdsForGroup(group)

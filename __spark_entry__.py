@@ -1411,9 +1411,10 @@ def q92_merge_prune_partitioned(spark: SparkSession, sf: str) -> DataFrame:
     li = load(spark, sf, "lineitem").withColumn(
         "ship_month", F.date_format("l_shipdate", "yyyy-MM")
     )
-    # per-call uuid: concurrent runs against the same sf dir must not
-    # race on the overwrite + rmtree/rename swap (q108's sink pattern)
-    root = f"/tmp/sparkgraft_q92_{_os.path.basename(sf.rstrip('/'))}_{uuid.uuid4().hex[:8]}"
+    # per-call unique dir under TMPDIR: concurrent runs against the same
+    # sf dir must not race on the overwrite + rmtree/rename swap (q108's
+    # sink pattern)
+    root = tempfile.mkdtemp(prefix=f"sparkgraft_q92_{_os.path.basename(sf.rstrip('/'))}_")
     fact_path = f"{root}/lineitem_by_month"
     (
         li.where(F.col("l_orderkey") % 3 != 0)
@@ -1737,7 +1738,7 @@ def q104_streaming_corpus_ingest(spark: SparkSession, sf: str) -> DataFrame:
     batch q13 dedup regardless of batch boundaries or redelivery
     (streaming/pipeline.ingest_corpus_incrementally). The oracle is
     the plain batch GROUP BY, which is exactly the point."""
-    work = f"/tmp/sparkgraft_q104_{os.path.basename(sf.rstrip('/'))}_{uuid.uuid4().hex[:8]}"
+    work = tempfile.mkdtemp(prefix=f"sparkgraft_q104_{os.path.basename(sf.rstrip('/'))}_")
     return stream.ingest_corpus_incrementally(spark, sf, work, n_arrival_files=4)
 
 
@@ -1980,7 +1981,7 @@ def q114_incremental_rollup(spark: SparkSession, sf: str) -> DataFrame:
     redelivery, so idempotence comes from the ledger + atomic rename).
     Oracle = the plain batch GROUP BY over the whole feed — the
     maintained table must be indistinguishable from recomputation."""
-    work = f"/tmp/sparkgraft_q114_{os.path.basename(sf.rstrip('/'))}_{uuid.uuid4().hex[:8]}"
+    work = tempfile.mkdtemp(prefix=f"sparkgraft_q114_{os.path.basename(sf.rstrip('/'))}_")
     return stream.maintain_hourly_rollup(spark, sf, work, n_arrival_files=4).orderBy(
         "hour", "event_type"
     )
@@ -4976,7 +4977,7 @@ def q220_streaming_holt(spark: SparkSession, sf: str) -> DataFrame:
     fold is NOT idempotent. The state machine replays the exact batch
     IEEE-op sequence, so the final store is BIT-EQUAL to q212's batch
     operator — the oracle IS q212's recursive-CTE replay."""
-    work = f"/tmp/sparkgraft_q220_{os.path.basename(sf.rstrip('/'))}_{uuid.uuid4().hex[:8]}"
+    work = tempfile.mkdtemp(prefix=f"sparkgraft_q220_{os.path.basename(sf.rstrip('/'))}_")
     out = stream.holt_state_stream(spark, sf, work, alpha=0.5, beta=0.25)
     return out.orderBy("user_id").limit(25)
 
@@ -5826,7 +5827,7 @@ def q264_stream_funnel(spark: SparkSession, sf: str) -> DataFrame:
     The oracle is q251's batch SQL VERBATIM — the batch-fixpoint
     contract (q104/q200): any split/order/redelivery of arrivals must
     land on the identical value hash."""
-    work = f"/tmp/sparkgraft_q264_{os.path.basename(sf.rstrip('/'))}_{uuid.uuid4().hex[:8]}"
+    work = tempfile.mkdtemp(prefix=f"sparkgraft_q264_{os.path.basename(sf.rstrip('/'))}_")
     fun = stream.funnel_stream(
         spark,
         sf,
@@ -6098,7 +6099,7 @@ def q277_streaming_cdc_upsert(spark: SparkSession, sf: str) -> DataFrame:
     readout). The oracle is the BATCH latest-per-key apply — the
     q104/q200/q264 batch-fixpoint contract for a MUTABLE keyed
     table. Readout: per-status key count + dsum of applied totals."""
-    work = f"/tmp/sparkgraft_q277_{os.path.basename(sf.rstrip('/'))}_{uuid.uuid4().hex[:8]}"
+    work = tempfile.mkdtemp(prefix=f"sparkgraft_q277_{os.path.basename(sf.rstrip('/'))}_")
     applied = stream.cdc_upsert_stream(spark, sf, work, n_arrival_files=4)
     return (
         applied.groupBy(F.col("status").alias("o_orderstatus"))

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ._schema_memo import read_parquet
+
 TABLES = (
     "region",
     "nation",
@@ -73,11 +75,16 @@ def _nanos_to_ts(df: DataFrame) -> DataFrame:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read testdata table ``name`` under the pinned session.
+
+    Schema inference (one Spark job) runs on the first load of a table
+    file and again only after the file changes or one of the Parquet
+    inference confs differs (``_schema_memo``); every other load reads
+    with the memoized schema and launches no job."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
     pin_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return _nanos_to_ts(df)
+    return _nanos_to_ts(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -9,8 +9,10 @@ One place owns the per-round state policy:
   ``every`` rounds (a constant per operator; 0 = never).  Under AQE a
   lazy checkpoint already runs the round's shuffle stages, so it
   truncates lineage without an extra job; the round's final stage runs
-  inside the next round's job.  ``converge`` fuses a convergence count
-  into the job that materialises the round, so a round costs one job;
+  inside the next round's job.  ``converge`` fuses its convergence test
+  (``isEmpty``, one job) into the job that materialises the round, so a
+  round costs that job plus the shuffle and broadcast stages of its
+  step;
 - **finish**: forces the result once and unpersists the setup caches
   handed to it, so repeated calls in a long-lived session do not
   accumulate cached blocks.
@@ -65,11 +67,13 @@ def iterate(state: DataFrame, step: Step, n: int, *, every: int = 1) -> DataFram
 def converge(state: DataFrame, step: Step, n: int, *, changed: str) -> DataFrame | None:
     """Run up to ``n`` checkpointed rounds until no row of the round
     has its boolean ``changed`` column set; return that state without
-    the column, or None if the bound ran out first.  The count is the
-    action that materialises the round's checkpoint blocks, so each
-    round computes its join once and costs one job."""
+    the column, or None if the bound ran out first.  The ``isEmpty``
+    test is the action that materialises the round's checkpoint blocks
+    (partitions its early stop leaves unread are filled in by the local
+    checkpoint), so each round computes its join once; the test is one
+    job where a ``count`` takes two (partial and final aggregate)."""
     for state in rounds(state, step, n):
-        if state.where(F.col(changed)).count() == 0:
+        if state.where(F.col(changed)).isEmpty():
             return state.drop(changed)
     return None
 

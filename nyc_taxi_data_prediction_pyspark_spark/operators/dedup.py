@@ -472,17 +472,23 @@ def connected_components(
 
     Distributed min-label propagation: each node repeatedly adopts the
     smallest label among itself and its neighbors; terminates when no
-    label changes. Iterations are O(diameter) — for dedup graphs
-    (small, dense clusters) that's 2-4 rounds. Each round is one
-    shuffle (join on node) + one aggregate; the driver only sees a
-    single converged? flag per round (count action), never the data.
+    label changes.  The first round is folded into the label init (one
+    aggregate: ``least(node, min neighbor)``), so a graph whose
+    components are stars around their min id (most dedup clusters)
+    converges in one round, and a component of diameter d in about d.
+    Each round is one join (edges ⋈ labels) and one ``groupBy(node)``
+    over the neighbor messages plus the node's own label; that
+    aggregate also yields the round's changed flag.  Per round only a
+    converged? answer (an ``isEmpty`` action) comes back, never the
+    data.  Duplicate or reversed pairs need no dedup: ``min`` is
+    the same over repeated edges.  ``max_iter`` bounds the rounds, the
+    init included.
 
     Returns (node, cluster_id) for every node appearing in ``pairs``.
     """
     edges = (
         pairs.select(F.col(src).alias("s"), F.col(dst).alias("t"))
         .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("t")))
-        .distinct()
         # the caller's pair plan is usually EXPENSIVE (shingle explode +
         # posting-list self-join); without truncation every propagation
         # round AND the label init re-run it from source — measured 16 s
@@ -490,23 +496,25 @@ def connected_components(
         # all O(diameter) rounds.
         .localCheckpoint(eager=False)
     )
-    labels = edges.select(F.col("s").alias("node")).distinct().withColumn(
-        "cluster_id", F.col("node")
+    labels = edges.groupBy(F.col("s").alias("node")).agg(
+        F.least(F.col("node"), F.min("t")).alias("cluster_id")
     )
 
     def step(labels: DataFrame) -> DataFrame:
-        neighbor_min = (
-            edges.join(labels, edges.t == labels.node)
-            .groupBy("s")
-            .agg(F.min("cluster_id").alias("nbr_min"))
+        msgs = edges.join(labels, edges.t == labels.node).select(
+            F.col("s").alias("node"), "cluster_id"
         )
-        new = F.least(F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id")))
-        return labels.join(neighbor_min, labels.node == neighbor_min.s, "left").select(
-            "node", new.alias("cluster_id"), (F.col("cluster_id") != new).alias("__changed")
+        own = labels.withColumn("own", F.col("cluster_id"))
+        return (
+            msgs.unionByName(own, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(
+                F.min("cluster_id").alias("cluster_id"),
+                (F.min("cluster_id") < F.max("own")).alias("__changed"),
+            )
         )
 
-    # lazy checkpoint + fused convergence count: one job per round
-    labels = fx.converge(labels, step, max_iter, changed="__changed")
+    labels = fx.converge(labels, step, max_iter - 1, changed="__changed")
     if labels is not None:
         return labels
     raise RuntimeError(

@@ -18,6 +18,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .._schema_memo import read_parquet, remember
 from ..operators.merge import anti_new_rows
 from ..schemas import LOAD_TS_COL
 
@@ -76,19 +77,33 @@ class Warehouse:
     # data rewrite, and concurrent readers never observe a half-written
     # table (the version dir is complete before the pointer moves).
 
-    def snapshot_write(self, table: str, df: DataFrame) -> int:
-        """Write ``df`` as the next immutable version of ``table`` and
-        atomically advance the current-version pointer. Returns the new
-        version number (1-based)."""
+    def _version_dir(self, table: str, version: int) -> str:
+        return os.path.join(self.root, table, "_v", f"{version:06d}")
+
+    def _write_version(self, table: str, df: DataFrame) -> int:
+        """Write ``df`` as the next version directory of ``table`` (no
+        pointer moves) and keep its schema for ``read_snapshot``."""
         base = os.path.join(self.root, table, "_v")
         os.makedirs(base, exist_ok=True)
         existing = sorted(int(d) for d in os.listdir(base) if d.isdigit())
         v = (existing[-1] + 1) if existing else 1
-        df.write.mode("overwrite").parquet(os.path.join(base, f"{v:06d}"))
+        path = self._version_dir(table, v)
+        df.write.mode("overwrite").parquet(path)
+        remember(self.spark, path, df.schema)
+        return v
+
+    def _set_current(self, table: str, version: int) -> None:
         tmp = os.path.join(self.root, table, "_current.tmp")
         with open(tmp, "w") as f:
-            f.write(str(v))
+            f.write(str(version))
         os.replace(tmp, os.path.join(self.root, table, "_current"))
+
+    def snapshot_write(self, table: str, df: DataFrame) -> int:
+        """Write ``df`` as the next immutable version of ``table`` and
+        atomically advance the current-version pointer. Returns the new
+        version number (1-based)."""
+        v = self._write_version(table, df)
+        self._set_current(table, v)
         return v
 
     def snapshot_versions(self, table: str) -> list[int]:
@@ -99,13 +114,16 @@ class Warehouse:
 
     def read_snapshot(self, table: str, version: int | None = None) -> DataFrame:
         """Read ``table`` at ``version`` (time travel), or at the
-        current pointer when omitted."""
+        current pointer when omitted.
+
+        A version written in this process is read with the schema it
+        was written with, so the read launches no job; other versions
+        pay one schema-inference job on their first read (``read``, on
+        the mutable table directory, always infers)."""
         if version is None:
             with open(os.path.join(self.root, table, "_current")) as f:
                 version = int(f.read().strip())
-        return self.spark.read.parquet(
-            os.path.join(self.root, table, "_v", f"{version:06d}")
-        )
+        return read_parquet(self.spark, self._version_dir(table, version))
 
     def vacuum_snapshots(self, table: str, *, keep_last: int = 1) -> list[int]:
         """Drop all but the newest ``keep_last`` versions (the retention
@@ -116,7 +134,7 @@ class Warehouse:
             current = int(f.read().strip())
         drop = [v for v in versions[:-keep_last] if v != current] if keep_last else []
         for v in drop:
-            shutil.rmtree(os.path.join(self.root, table, "_v", f"{v:06d}"))
+            shutil.rmtree(self._version_dir(table, v))
         return drop
 
     # S11: CREATE OR REPLACE STAGE — staging dir lifecycle.
@@ -317,14 +335,7 @@ class Warehouse:
         Returns {table: new_version}."""
         import json
 
-        staged: dict[str, int] = {}
-        for table, df in sorted(writes.items()):
-            base = os.path.join(self.root, table, "_v")
-            os.makedirs(base, exist_ok=True)
-            existing = sorted(int(d) for d in os.listdir(base) if d.isdigit())
-            v = (existing[-1] + 1) if existing else 1
-            df.write.mode("overwrite").parquet(os.path.join(base, f"{v:06d}"))
-            staged[table] = v
+        staged = {table: self._write_version(table, df) for table, df in sorted(writes.items())}
         manifest = dict(self._txn_manifest())
         manifest.update(staged)
         tmp = os.path.join(self.root, "_txn.tmp")
@@ -332,10 +343,7 @@ class Warehouse:
             json.dump(manifest, f)
         os.replace(tmp, os.path.join(self.root, "_txn"))  # the commit point
         for table, v in staged.items():  # post-commit convenience pointers
-            ptmp = os.path.join(self.root, table, "_current.tmp")
-            with open(ptmp, "w") as f:
-                f.write(str(v))
-            os.replace(ptmp, os.path.join(self.root, table, "_current"))
+            self._set_current(table, v)
         return staged
 
     def _txn_manifest(self) -> dict[str, int]:

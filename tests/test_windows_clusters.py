@@ -4,7 +4,9 @@ components / keep-one dedup + TF-IDF."""
 from __future__ import annotations
 
 import datetime as dt
+import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_prediction_pyspark_spark.operators import dedup, text as textops, windows
@@ -42,11 +44,56 @@ def test_sessionize_gap_boundaries(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 2, 5: 1}
 
 
-def test_connected_components_merges_chains(spark):
-    # 1-2, 2-3 chain + isolated pair 10-11 → clusters {1,2,3} and {10,11}
-    pairs = spark.createDataFrame([(2, 1), (2, 3), (10, 11)], "id_a long, id_b long")
-    comps = {r["node"]: r["cluster_id"] for r in dedup.connected_components(pairs).collect()}
-    assert comps == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+def _union_find(pairs):
+    parent = {}
+
+    def root(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: root(x) for x in parent}
+
+
+def _shuffled_path(n, seed):
+    ids = random.Random(seed).sample(range(100, 1000), n)
+    return list(zip(ids, ids[1:]))
+
+
+def _random_graph(n_nodes, n_edges, seed):
+    rng = random.Random(seed)
+    return [(rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)]
+
+
+@pytest.mark.parametrize(
+    "pairs, max_iter, converges",
+    [
+        # 1-2, 2-3 chain + isolated pair 10-11 → clusters {1,2,3} and {10,11}
+        pytest.param([(2, 1), (2, 3), (10, 11)], 20, True, id="chains"),
+        # diameter 14: the min id needs many rounds past the init fold
+        pytest.param(_shuffled_path(15, seed=3), 20, True, id="shuffled_path15"),
+        pytest.param(_random_graph(60, 45, seed=7), 20, True, id="random_graph"),
+        # duplicate, reversed and self pairs change nothing
+        pytest.param(
+            [(1, 2), (2, 1), (1, 2), (3, 2), (5, 4), (4, 5), (4, 5), (7, 7)], 20, True,
+            id="duplicate_reversed",
+        ),
+        # a 10-node chain needs more than 3 rounds
+        pytest.param([(i, i + 1) for i in range(10)], 3, False, id="longer_than_max_iter"),
+    ],
+)
+def test_connected_components_merges_chains(spark, pairs, max_iter, converges):
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    if not converges:
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.connected_components(df, max_iter=max_iter)
+        return
+    comps = dedup.connected_components(df, max_iter=max_iter)
+    assert {r["node"]: r["cluster_id"] for r in comps.collect()} == _union_find(pairs)
 
 
 def test_dedup_keep_one(spark):

@@ -6558,49 +6558,6 @@ def q304_t_closeness(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def q305_woe_iv_buckets(spark: SparkSession, sf: str) -> DataFrame:
-    """q240's all-BIGINT prefix (evaluation.woe_iv_buckets): the same
-    discrete rank-selected decile cuts and bucket fold, emitting ONLY
-    ``bucket, n_pos, n_neg`` — nothing float-derived.  Round-13 bisect
-    surface #1 for the three-round q240 driver red that local strict
-    checks cannot reproduce: red here ⇒ the divergence is in
-    cut/bucket land (against all local evidence); green here ⇒ the
-    bucket layer is exonerated in the driver's own environment."""
-    ev = load(spark, sf, "events")
-    labeled = ev.select(
-        "value", (F.col("event_type") == "purchase").cast("int").alias("y")
-    )
-    return evaluation.woe_iv_buckets(
-        labeled, value_col="value", label_col="y", n_buckets=10
-    )
-
-
-def q307_oracle_version_probe(spark: SparkSession, sf: str) -> DataFrame:
-    """Oracle-engine version probe (round-13 bisect instrumentation,
-    per the round-12 verdict's 'make the driver itself localize the
-    flip' and ADVICE's 'driver-observable instrumentation'): the
-    ORACLE emits ``10000*major + 100*minor + patch`` rows of the
-    constant ``marker=1``, the version triple parsed from DuckDB's own
-    ``version()``; the Spark side emits the same count derived from
-    the LOCAL duckdb module (1.0.0 here → 10000 rows).  Green ⇒ the
-    driver's oracle engine is the same DuckDB the local strict sweeps
-    exonerated q240 on, eliminating engine-version skew as the
-    divergence layer.  Red ⇒ version skew is REAL and the recorded
-    ``oracle_rows`` field of CORRECTNESS_r13.json literally names the
-    driver's DuckDB version — e.g. 1.4.1 → 10401 — turning the
-    three-round q240 mystery into a known-version behavioral diff
-    (this machine's 1.0.0, for instance, TRUNCATES decimal downscale
-    casts where Spark rounds HALF_UP — measured while building q306).
-    Not a data query: no table scan, constant-size, shape-neutral."""
-    import re as _re
-
-    import duckdb as _duckdb
-
-    m = _re.match(r"(\d+)\.(\d+)\.(\d+)", _duckdb.__version__)
-    n = 10000 * int(m.group(1)) + 100 * int(m.group(2)) + int(m.group(3))
-    return spark.range(n).select(F.lit(1).alias("marker"))
-
-
 def q308_theil_sen(spark: SparkSession, sf: str) -> DataFrame:
     """Theil–Sen robust trend (evaluation.theil_sen): per event type,
     the lower-median pairwise slope of daily event counts over the day
@@ -6648,22 +6605,6 @@ def q309_mann_kendall(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def q306_woe_iv_decimal(spark: SparkSession, sf: str) -> DataFrame:
-    """q240 with its float outputs as TYPED DECIMAL(18,6) columns
-    (evaluation.woe_iv_decimal) instead of round-6 doubles — the
-    double re-cast/format layer removed entirely.  Round-13 bisect
-    surface #2: if q240 stays red while this is green, the final
-    round-6-double layer is the guilty one and the public WoE surface
-    switches to the decimal columns (oracle in lockstep)."""
-    ev = load(spark, sf, "events")
-    labeled = ev.select(
-        "value", (F.col("event_type") == "purchase").cast("int").alias("y")
-    )
-    return evaluation.woe_iv_decimal(
-        labeled, value_col="value", label_col="y", n_buckets=10
-    )
-
-
 def q310_chao1_vocab(spark: SparkSession, sf: str) -> DataFrame:
     """Chao1 unseen-vocabulary estimate (text.chao1_vocab, Chao 1984
     bias-corrected) over word 5-grams — the nonparametric lower bound
@@ -6706,208 +6647,8 @@ def q312_jackknife_shard_variance(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# Driver-slot rotation (round 7): the correctness driver hard-checks
-# the FIRST 50 registry entries only; rotation is BY EVIDENCE AGE
-# (the round-5 verdict's standing rule).  Evidence ages entering
-# round 7 (newest driver-green per query, from CORRECTNESS_r01-r06):
-#   - r6: the q01-q50 band + q58/q153/q174 + q182-q184 (50)
-#   - r5: q75-q77 q109 q140 q142-q181 remainder (47)
-#   - r4: q89 q92 q100 q105 q108 q114 + q119-q141 band (47)
-#   - r3: q51-q118 remainder (40)  <- the oldest band
-#   - never driver-checked: q185-q248 (registered after earlier heads
-#     filled; all hold full oracles + local check_oracle evidence)
-# This round's 50 slots (exactly the round-6 verdict's schedule):
-#   - the 40-query r3 band (q51/q55/q56/q67/q68/q74/q78-q88/q90/q91/
-#     q93-q99/q101-q104/q106/q107/q110-q113/q115-q118);
-#   - q185-q194 (10): first driver rows for the round-6 additions
-#     (deterministic shuffle, bigram NLL, mixture interleave,
-#     duplicate-span coverage, DSIR, HITS, label propagation,
-#     SemDeDup, C4/Gopher gate stack, winnowing fingerprints).
-# Oldest evidence after this head lands: r4 (47 queries) — round 8's
-# head, with the remaining 3 slots starting on _R7_DEFERRED_NEW (56
-# queries, q195-q250); round 9 takes the r5 band (47) + 3 more; round
-# 10 the remaining 50 deferred — every query stays within the
-# ceil(250/50)=5-round freshness bound (the rotation test's
-# feasibility check).
-# Every query stays registered and oracle-checked locally regardless
-# of position (tools/check_oracle.py runs all).
-_DRIVER_RECONFIRM_R04 = [  # kept for the rotation test's history
-    "q13_exact_dedup",
-    "q36_sessionization",
-    "q89_volume_shipping",
-    "q92_merge_prune_partitioned",
-    "q100_revenue_share_threshold",
-    "q105_ivf_ann",
-    "q108_stream_attribution",
-    "q109_pagerank",
-    "q114_incremental_rollup",
-]
-_DRIVER_RECONFIRM_R05 = [  # kept for the rotation test's history
-    "q58_approx_stats",
-    "q140_last_n_features",
-    "q17_ngram_jaccard_dedup",
-    "q38_dedup_clusters",
-    "q109_pagerank",
-    "q20_minhash_lsh_dedup",
-    "q21_simhash",
-]
-# round-6 head: see the rotation note above
-_R6_NEWLY_CHECKABLE = {29, 39, 58}
-_R6_REWRITTEN = {153, 174}
-_R6_NEW = {182, 183, 184}
-_R6_FRESH_EVIDENCE_LE_Q50 = {13, 17, 20, 21, 36, 38}  # r4/r5 rows already
-# Queries registered AFTER the 50-slot head filled (the r2-era band +
-# newly-checkable + rewritten alone demand 47 slots): they hold full
-# oracles and local check_oracle evidence this round, and take their
-# first driver rows in round 7's head, which must still fit —
-# asserted by the rotation test's capacity check.
-_R6_DEFERRED_NEW = {185, 186, 187, 188, 189, 190, 191, 192, 193, 194}
-# Registered after _R6_DEFERRED_NEW already filled round 7's head
-# (40-query r3 band + those ten = exactly 50): full oracles + local
-# check_oracle evidence now; first driver rows in rounds 8-9, which
-# the rotation test's schedule-feasibility check verifies still keep
-# every query within the ceil(N/50)-round freshness bound (N=225 → 5).
-_R7_DEFERRED_NEW = {
-    195, 196, 197, 198, 199, 200, 201, 202, 203, 204, 205, 206, 207, 208, 209,
-    210, 211, 212, 213, 214, 215, 216, 217, 218, 219, 220, 221, 222, 223,
-    224, 225, 226, 227, 228, 229, 230, 231, 232, 233, 234, 235, 236,
-    237, 238, 239, 240, 241, 242, 243, 244, 245, 246, 247, 248,
-    # round-7 additions (registered after round 7's head filled).
-    # q249-q250 fill the 2 spare slots of the rounds-8-10 sweep
-    # (47 r4 + 47 r5 + 56 deferred = 150); q251-q258 overflow into a
-    # round-11 head (the sweep becomes rounds 8-11, still inside the
-    # ceil(N/50)-round freshness bound for N=258 -> 6 rounds), and the
-    # rotation test's feasibility check covers the extended window.
-    249, 250, 251, 252, 253, 254, 255, 256, 257, 258,
-    259, 260, 261, 262, 263, 264, 265, 266, 267, 268,
-}
-# Round-7 head, exactly as the round-6 verdict scheduled it: the
-# 40-query r3-evidence band (q51-q118 minus the members that picked up
-# r4/r5/r6 rows — computed from CORRECTNESS_r01..r06 and frozen here;
-# the rotation test recomputes it from the records) plus the ten
-# deferred round-6 additions taking their FIRST driver rows.  40 + 10
-# = exactly 50.  After this head lands, the oldest evidence anywhere
-# is r4 — rounds 8-9 absorb the r4/r5 bands plus _R7_DEFERRED_NEW.
-_R7_R3_BAND = {
-    51, 55, 56, 67, 68, 74, 78, 79, 80, 81, 82, 83, 84, 85, 86, 87, 88,
-    90, 91, 93, 94, 95, 96, 97, 98, 99, 101, 102, 103, 104, 106, 107,
-    110, 111, 112, 113, 115, 116, 117, 118,
-}
-# Round-8 head, exactly as the round-7 verdict scheduled it: the
-# 47-query r4-evidence band (now the OLDEST driver evidence anywhere —
-# computed from CORRECTNESS_r01..r07 and frozen here; the rotation
-# test recomputes it from the records) plus the three oldest deferred
-# registrations (q195-q197) taking their FIRST driver rows,
-# greedy-oldest-first.  47 + 3 = exactly 50.  After this head lands
-# the oldest band is r5; rounds 9-11 absorb the r5 band plus the
-# remaining deferrals q198-q268 (47 + 71 = 118 over 150 slots).
-_R8_R4_BAND = {
-    13, 36, 52, 53, 54, 57, 59, 60, 61, 62, 63, 64, 65, 66, 69, 70, 71,
-    72, 73, 89, 92, 100, 105, 108, 114, 119, 120, 121, 122, 123, 124,
-    125, 126, 127, 128, 129, 130, 131, 132, 133, 134, 135, 136, 137,
-    138, 139, 141,
-}
-_R8_DEFERRED_HEAD = {195, 196, 197}
-# Queries registered in round 8, after this head filled: full oracles
-# + local check_oracle evidence at three SFs now; first driver rows
-# scheduled by the rotation test's feasibility arithmetic.
-_R8_DEFERRED_NEW: set[int] = {
-    269, 270, 271, 272, 273, 274, 275, 276, 277, 278,
-    279, 280, 281, 282, 283, 284, 285, 286, 287, 288,
-}
-# (Round-9 head constants _R9_R5_BAND/_R9_DEFERRED_HEAD/_R9_DEFERRED_NEW
-# retired per round-10 ADVICE — CORRECTNESS_r09.json is the durable
-# record of that head; tools/next_head.py recomputes any past band.)
-#
-# Round-12 head, kept for the rotation history: q240 retry + q300 +
-# the four round-12 registrations + the 44 oldest r6-band members.
-# CORRECTNESS_r12.json is the durable record of this head (49/50
-# green; q240 red a third time).
-_R12_HEAD: set[int] = (
-    {240, 300, 301, 302, 303, 304}
-    | (set(range(1, 13)) | {14, 15, 16, 18, 19} | set(range(22, 36)) | {37}
-       | set(range(39, 51)))
-)
-
-# The round this entry module is frozen for: tools/next_head.py reads
-# it to pin its record set to CORRECTNESS_r01..r{ROUND-1} by default,
-# so a driver-side artifact drop mid-round can never change (or fail)
-# the rotation arithmetic (round-12 ADVICE).
-ROUND = 13
-
-# Queries whose Spark implementation AND DuckDB oracle were rewritten
-# in lockstep at the given round: driver greens recorded BEFORE that
-# round attest the old algebra and are discounted by the rotation
-# rule — the rewritten pair ranks with the no-green class until it
-# takes a fresh row (round-12 ADVICE: q168/q224 adopted q240's
-# discrete-cut machinery in round 12, invalidating their r10/r11
-# greens; q240 itself has no green to discount but is listed for the
-# record).
-REWORKED_AT: dict[int, int] = {168: 12, 224: 12, 240: 12}
-
-# Round-13 head (tools/next_head.py's ranking from CORRECTNESS_r01..
-# r12 with the REWORKED_AT discount, plus this round's two
-# registrations): the no-valid-green class entering round 13 is
-#   - q240 (red in r10/r11/r12 — rows/schema match, hash doesn't;
-#     local strict checks green, margins exonerate every locally
-#     visible layer, so this round BISECTS in the driver's own
-#     environment instead of reworking blind),
-#   - q168/q224 (lockstep impl+oracle rewrites in round 12 — their
-#     old greens are discounted per REWORKED_AT),
-#   - q305/q306/q307 (the three bisect surfaces registered THIS
-#     round with oracle + strict-sweep evidence, entering the head in
-#     their registration round per the evidence-paced rule: q305
-#     emits q240's pure-BIGINT bucket prefix, q306 its
-#     DECIMAL(18,6)-typed float outputs, q307 encodes the oracle
-#     engine's own version in its row count — the driver's red/green
-#     pattern across q240/q305/q306/q307 names the guilty layer),
-#   - q308-q312 (this round's operator registrations: Theil–Sen
-#     robust slope, Mann–Kendall trend test, Chao1 unseen-vocabulary,
-#     Hill tail-index, delete-one-shard jackknife — the robust-trend
-#     family next to q168's MAD and the corpus-statistics family
-#     next to q295/q296).
-# Then the 6 r6-band leftovers (q58 q153 q174 q182 q183 q184,
-# evidence age 7 — the bounded drift round 12 scheduled) and the 33
-# oldest r7-band members in number order.  11 + 6 + 33 = 50; the r7
-# band's 17-member tail (q111-q113 q115-q118 q185-q194) defers to
-# round 14.
-_R13_HEAD: set[int] = (
-    {168, 224, 240, 305, 306, 307, 308, 309, 310, 311, 312}
-    | {58, 153, 174, 182, 183, 184}
-    | {51, 55, 56, 67, 68, 74, 78, 79, 80, 81, 82, 83, 84, 85, 86, 87,
-       88, 90, 91, 93, 94, 95, 96, 97, 98, 99, 101, 102, 103, 104, 106,
-       107, 110}
-)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    base = _all_queries()
-    order = _driver_order(list(base))
-    return {k: base[k] for k in order}
-
-
-def _driver_order(names: list[str]) -> list[str]:
-    """First-50 = round-13 rotation targets, chosen by EVIDENCE AGE
-    with the REWORKED_AT discount: the no-valid-green class (q240 red
-    three rounds; q168/q224 reworked in lockstep in round 12; the
-    q305/q306/q307 bisect registrations; the q308-q312 operator
-    registrations) outranks every recorded band, then the 6 r6-band
-    leftovers and the 33 oldest r7-band members in number order fill
-    the rest.  The tail follows in number order."""
-
-    def num(n: str) -> int:
-        return int(n[1:].split("_", 1)[0])
-
-    head_nums = _R13_HEAD
-    head = [n for n in names if num(n) in head_nums]
-    tail = [n for n in names if num(n) not in head_nums]
-    out = sorted(head, key=num) + sorted(tail, key=num)
-    assert len(out) == len(names) and set(out) == set(names)
-    assert len(head) == 50, f"driver head must fill exactly 50 slots, got {len(head)}"
-    return out
-
-
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registered query by name, in ascending qNN order."""
     return {
         "q01_pricing_summary": q01_pricing_summary,
         "q02_count_orders": q02_count_orders,
@@ -7213,9 +6954,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q302_coverage_greedy": q302_coverage_greedy,
         "q303_simpsons_reversal": q303_simpsons_reversal,
         "q304_t_closeness": q304_t_closeness,
-        "q305_woe_iv_buckets": q305_woe_iv_buckets,
-        "q306_woe_iv_decimal": q306_woe_iv_decimal,
-        "q307_oracle_version_probe": q307_oracle_version_probe,
         "q308_theil_sen": q308_theil_sen,
         "q309_mann_kendall": q309_mann_kendall,
         "q310_chao1_vocab": q310_chao1_vocab,
@@ -8010,12 +7748,7 @@ def _corr_matrix_sql(measures: list[str], scale: int = 4) -> str:
 
 
 def oracle_sql() -> dict[str, str]:
-    base = _all_oracle_sql()
-    order = [n for n in _driver_order(list(_all_queries())) if n in base]
-    return {k: base[k] for k in order}
-
-
-def _all_oracle_sql() -> dict[str, str]:
+    """Each query's DuckDB oracle SQL, in the order of ``queries()``."""
     from nyc_taxi_data_prediction_pyspark_spark.operators.aggregates import (
         HOURLY_DEMAND_ORACLE,
         PRICING_SUMMARY_ORACLE,
@@ -15174,108 +14907,6 @@ SELECT c_nationkey, c_mktsegment, n_class,
        100 * num > 15 * n_class * (SELECT n_tot FROM gtot) * m1 AS violates_t
 FROM per ORDER BY c_nationkey, c_mktsegment
 """
-    # q305: q240's oracle truncated at its all-BIGINT prefix — same
-    # histogram/rank CTEs, stopping at the bucket counts (the round-13
-    # bisect surface; nothing float-derived for a hash to diverge on).
-    oracles["q305_woe_iv_buckets"] = """
-WITH vals AS (
-  SELECT CAST(value AS DOUBLE) AS v FROM events WHERE value IS NOT NULL
-),
-hist AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS c FROM vals GROUP BY 1),
-cumh AS (
-  SELECT v,
-         CAST(SUM(c) OVER (ORDER BY v
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cc,
-         CAST(SUM(c) OVER () AS BIGINT) AS nn
-  FROM hist
-),
-cutrows AS (
-  SELECT k, MIN(v) AS cut
-  FROM cumh CROSS JOIN (SELECT CAST(UNNEST(range(1, 10)) AS BIGINT) AS k) ks
-  WHERE cc * 10 >= k * nn
-  GROUP BY 1
-),
-cuts AS (SELECT list_sort(LIST(cut)) AS cuts FROM cutrows),
-bucketed AS (
-  SELECT CAST(1 + list_sum(list_transform(c.cuts,
-           x -> CASE WHEN CAST(e.value AS DOUBLE) > x THEN 1 ELSE 0 END)) AS BIGINT) AS bucket,
-         CASE WHEN e.event_type = 'purchase' THEN 1 ELSE 0 END AS y
-  FROM events e, cuts c WHERE e.value IS NOT NULL
-)
-SELECT bucket, CAST(SUM(y) AS BIGINT) AS n_pos,
-       CAST(SUM(1 - y) AS BIGINT) AS n_neg
-FROM bucketed GROUP BY 1 ORDER BY bucket
-"""
-    # q306: q240's oracle with the float outputs emitted as TYPED
-    # DECIMAL(18,6): exact decimal round(x, 6) first (half-away-from-
-    # zero in DuckDB = BigDecimal HALF_UP in Spark on every sign; the
-    # bare DuckDB decimal->decimal downscale CAST truncates toward
-    # zero, measured locally, so it cannot be used alone), then a
-    # lossless cast to the display scale — removing the double
-    # re-cast/round-6/format layer the hash otherwise sees (round-13
-    # bisect surface #2).
-    oracles["q306_woe_iv_decimal"] = """
-WITH vals AS (
-  SELECT CAST(value AS DOUBLE) AS v FROM events WHERE value IS NOT NULL
-),
-hist AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS c FROM vals GROUP BY 1),
-cumh AS (
-  SELECT v,
-         CAST(SUM(c) OVER (ORDER BY v
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cc,
-         CAST(SUM(c) OVER () AS BIGINT) AS nn
-  FROM hist
-),
-cutrows AS (
-  SELECT k, MIN(v) AS cut
-  FROM cumh CROSS JOIN (SELECT CAST(UNNEST(range(1, 10)) AS BIGINT) AS k) ks
-  WHERE cc * 10 >= k * nn
-  GROUP BY 1
-),
-cuts AS (SELECT list_sort(LIST(cut)) AS cuts FROM cutrows),
-bucketed AS (
-  SELECT CAST(1 + list_sum(list_transform(c.cuts,
-           x -> CASE WHEN CAST(e.value AS DOUBLE) > x THEN 1 ELSE 0 END)) AS BIGINT) AS bucket,
-         CASE WHEN e.event_type = 'purchase' THEN 1 ELSE 0 END AS y
-  FROM events e, cuts c WHERE e.value IS NOT NULL
-),
-counts AS (
-  SELECT bucket, CAST(SUM(y) AS BIGINT) AS n_pos,
-         CAST(SUM(1 - y) AS BIGINT) AS n_neg
-  FROM bucketed GROUP BY 1
-),
-scored AS (
-  SELECT bucket, n_pos, n_neg,
-         CAST(ln((CAST(n_pos + 1 AS DOUBLE) / CAST(SUM(n_pos) OVER () + 10 AS DOUBLE))
-            / (CAST(n_neg + 1 AS DOUBLE) / CAST(SUM(n_neg) OVER () + 10 AS DOUBLE)))
-           AS DECIMAL(28,12)) AS woe,
-         CAST((CAST(n_pos + 1 AS DOUBLE) / CAST(SUM(n_pos) OVER () + 10 AS DOUBLE)
-               - CAST(n_neg + 1 AS DOUBLE) / CAST(SUM(n_neg) OVER () + 10 AS DOUBLE))
-              * ln((CAST(n_pos + 1 AS DOUBLE) / CAST(SUM(n_pos) OVER () + 10 AS DOUBLE))
-                   / (CAST(n_neg + 1 AS DOUBLE) / CAST(SUM(n_neg) OVER () + 10 AS DOUBLE)))
-           AS DECIMAL(28,12)) AS term
-  FROM counts
-)
-SELECT bucket, n_pos, n_neg,
-       CAST(round(woe, 6) AS DECIMAL(18,6)) AS woe,
-       CAST(round(term, 6) AS DECIMAL(18,6)) AS iv_term,
-       CAST(round(SUM(term) OVER (), 6) AS DECIMAL(18,6)) AS iv
-FROM scored ORDER BY bucket
-"""
-    # q307: the oracle side of the version probe — row count encodes
-    # the EXECUTING DuckDB's own version() as 10000*major + 100*minor
-    # + patch (regexp-parsed, robust to 'v' prefixes / dev suffixes).
-    # Green iff the driver's oracle engine matches the local duckdb
-    # the strict sweeps ran on; red makes CORRECTNESS's oracle_rows
-    # field name the driver's version outright.
-    oracles["q307_oracle_version_probe"] = r"""
-WITH v AS (
-  SELECT CAST(regexp_extract(version(), '(\d+)\.(\d+)\.(\d+)', 1) AS BIGINT) AS maj,
-         CAST(regexp_extract(version(), '(\d+)\.(\d+)\.(\d+)', 2) AS BIGINT) AS mnr,
-         CAST(regexp_extract(version(), '(\d+)\.(\d+)\.(\d+)', 3) AS BIGINT) AS pat
-)
-SELECT 1 AS marker FROM v, UNNEST(range(10000 * maj + 100 * mnr + pat))
-"""
     # q308: identical daily grid, pair slopes as correctly-rounded
     # BIGINT divisions (bit-identical cross-engine), lower-median by
     # integer rank selection — slope/intercept emitted RAW (they are
@@ -15484,4 +15115,4 @@ SELECT g, nn AS n_rows,
              * CAST(t_sum AS DOUBLE)), 6) AS se_jack
 FROM fin
 """
-    return oracles
+    return {name: oracles[name] for name in queries() if name in oracles}

@@ -349,9 +349,6 @@ HEADLINE_SKIP = {
     "q103_dominant_suppliers": "share-threshold argmax; shape timed by q111",
     "q105_ivf_ann": "IVF ANN; cell-pruned shape timed by q19",
     "q106_zorder_clustering": "interleaved-bit layout; locality join timed by q135",
-    "q305_woe_iv_buckets": "q240's BIGINT prefix; WoE shape timed by q240",
-    "q306_woe_iv_decimal": "q240 with decimal-typed outputs; WoE shape timed by q240",
-    "q307_oracle_version_probe": "constant-size engine-version probe; no data-scale component",
     "q308_theil_sen": "calendar-bounded daily pair grid; the only data-scale stage (daily agg scan) timed by q08; rank-stat family timed by q244",
     "q309_mann_kendall": "calendar-bounded daily pair grid; daily agg scan timed by q08; rank-stat family timed by q244",
     "q310_chao1_vocab": "count-of-counts prefix of q295's 5-gram pipeline; gram scan timed by q295",

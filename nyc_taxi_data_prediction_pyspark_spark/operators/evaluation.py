@@ -525,10 +525,7 @@ def woe_iv(
       the tied rows one bucket up — rows/schema still match, BIGINT
       counts don't. With cuts that ARE data values the ``>`` fold
       compares bit-identical parquet doubles, which removes the
-      tied-cut layer of cross-engine drift (the remaining layers —
-      driver-environment engine versions, hash formatting — are what
-      the ``woe_iv_buckets`` / ``woe_iv_decimal`` bisect surfaces
-      below isolate).
+      tied-cut layer of cross-engine drift.
     * **ln outputs** — EVERY ln-derived output, the bare ``woe``
       included, is quantized to DECIMAL(28,12) before round 6 (JVM
       ``Math.log`` and libm ``ln`` may differ by 1 ulp on the same
@@ -542,84 +539,6 @@ def woe_iv(
     IV total rides a metadata-window sum). Returns per bucket:
     bucket, n_pos, n_neg, woe, iv_term, iv.
     """
-    scored = _woe_scored(df, value_col=value_col, label_col=label_col,
-                         n_buckets=n_buckets)
-    wt = W.partitionBy()  # n_buckets-row frame — metadata-sized
-    return scored.select(
-        "bucket",
-        "n_pos",
-        "n_neg",
-        F.round(F.col("__woe").cast("double"), 6).alias("woe"),
-        F.round(F.col("__term").cast("double"), 6).alias("iv_term"),
-        F.round(F.sum("__term").over(wt).cast("double"), 6).alias("iv"),
-    ).orderBy("bucket")
-
-
-def woe_iv_buckets(
-    df: DataFrame,
-    *,
-    value_col: str,
-    label_col: str,
-    n_buckets: int = 10,
-) -> DataFrame:
-    """The WoE pipeline truncated at its all-BIGINT prefix: per-decile
-    ``(bucket, n_pos, n_neg)`` counts, nothing float-derived at all.
-
-    Diagnostic bisect surface (round-13 verdict prescription): after
-    three driver-red rounds on ``woe_iv`` that local strict checks
-    cannot reproduce, this query's driver row localizes the divergence
-    by construction — if it is red the flip is in discrete-cut/bucket
-    land (against all local evidence); if it is green the bucket layer
-    is exonerated in the driver's own environment and the divergence
-    lives in the float-output layers downstream.
-    """
-    return _woe_bucket_counts(
-        df, value_col=value_col, label_col=label_col, n_buckets=n_buckets
-    ).orderBy("bucket")
-
-
-def woe_iv_decimal(
-    df: DataFrame,
-    *,
-    value_col: str,
-    label_col: str,
-    n_buckets: int = 10,
-) -> DataFrame:
-    """The WoE pipeline with its float outputs surfaced as TYPED
-    DECIMAL(18,6) values instead of round-6 doubles.
-
-    Diagnostic bisect surface (round-13 verdict prescription, the
-    complement of ``woe_iv_buckets``): the DECIMAL(28,12)-quantized ln
-    terms are cast once more to DECIMAL(18,6) — HALF_UP in Spark's
-    BigDecimal and half-away-from-zero in DuckDB, identical on every
-    sign — so the comparison hash sees exact decimal digits and the
-    double re-cast / round-6 / float-format layer is removed entirely.
-    If ``woe_iv`` stays red while this is green, that final double
-    layer is the guilty one and the public surface can switch to the
-    decimal columns.
-    """
-    scored = _woe_scored(df, value_col=value_col, label_col=label_col,
-                         n_buckets=n_buckets)
-    wt = W.partitionBy()  # n_buckets-row frame — metadata-sized
-    return scored.select(
-        "bucket",
-        "n_pos",
-        "n_neg",
-        F.col("__woe").cast("decimal(18,6)").alias("woe"),
-        F.col("__term").cast("decimal(18,6)").alias("iv_term"),
-        F.sum("__term").over(wt).cast("decimal(18,6)").alias("iv"),
-    ).orderBy("bucket")
-
-
-def _woe_bucket_counts(
-    df: DataFrame,
-    *,
-    value_col: str,
-    label_col: str,
-    n_buckets: int,
-) -> DataFrame:
-    """Shared integer prefix of the WoE pipeline: discrete rank-selected
-    decile cuts → bucket fold → BIGINT (n_pos, n_neg) per bucket."""
     from .aggregates import discrete_quantile_cuts
 
     v = F.col(value_col).cast("double")
@@ -630,15 +549,11 @@ def _woe_bucket_counts(
         group_keys=[],
         fracs=[(i, n_buckets) for i in range(1, n_buckets)],
     )
-    # bucket is BIGINT on BOTH engines (round-14 root-cause fix for the
-    # four-round q240-family driver red): the oracle's ``list_sum``
-    # returns HUGEINT -> arrow decimal128(38,0) while Spark emitted INT,
-    # and the driver's value hash is representation-sensitive exactly
-    # there (int32/int64 width skew is tolerated — q101 green — but
-    # integer-vs-Decimal is not; byte-identical data and identical
-    # engine versions, proven by the committed BENCH_DETAIL sf_tables
-    # and the q307 probe, ruled out every data/version layer).  Both
-    # sides now CAST the bucket id to BIGINT; values are unchanged.
+    # bucket is BIGINT on BOTH engines: the oracle's ``list_sum`` returns
+    # HUGEINT -> arrow decimal128(38,0) while Spark's fold is INT, and a
+    # type-sensitive value hash tolerates int32/int64 width skew but not
+    # integer-vs-Decimal (q240's red until round 14).  Both sides CAST
+    # the bucket id to BIGINT; values are unchanged.
     bucket = (
         F.lit(1)
         + F.aggregate(
@@ -647,7 +562,7 @@ def _woe_bucket_counts(
             lambda acc, x: acc + x,
         )
     ).cast("bigint")
-    return (
+    counts = (
         df.where(v.isNotNull())
         .select(v.alias("__v"), y.alias("__y"))
         .crossJoin(F.broadcast(cuts))
@@ -658,32 +573,26 @@ def _woe_bucket_counts(
             F.sum(F.lit(1) - F.col("__y")).cast("bigint").alias("n_neg"),
         )
     )
-
-
-def _woe_scored(
-    df: DataFrame,
-    *,
-    value_col: str,
-    label_col: str,
-    n_buckets: int,
-) -> DataFrame:
-    """Bucket counts + the DECIMAL(28,12)-quantized ln terms (__woe,
-    __term) every WoE output surface derives from."""
-    counts = _woe_bucket_counts(
-        df, value_col=value_col, label_col=label_col, n_buckets=n_buckets
-    )
     wt = W.partitionBy()  # n_buckets-row frame — metadata-sized
     tp = F.sum("n_pos").over(wt)
     tn = F.sum("n_neg").over(wt)
     p = (F.col("n_pos") + 1).cast("double") / (tp + n_buckets).cast("double")
     q = (F.col("n_neg") + 1).cast("double") / (tn + n_buckets).cast("double")
-    return counts.select(
+    scored = counts.select(
         "bucket",
         "n_pos",
         "n_neg",
         F.log(p / q).cast("decimal(28,12)").alias("__woe"),
         ((p - q) * F.log(p / q)).cast("decimal(28,12)").alias("__term"),
     )
+    return scored.select(
+        "bucket",
+        "n_pos",
+        "n_neg",
+        F.round(F.col("__woe").cast("double"), 6).alias("woe"),
+        F.round(F.col("__term").cast("double"), 6).alias("iv_term"),
+        F.round(F.sum("__term").over(wt).cast("double"), 6).alias("iv"),
+    ).orderBy("bucket")
 
 
 def kendall_tau_b(

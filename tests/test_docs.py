@@ -74,10 +74,17 @@ def test_scaling_md_counts_match_entry_surface():
 
 
 def test_every_oracle_query_exists():
+    """Registry invariants: unique names in ascending qNN order, and
+    oracle_sql() iterating in the same order as queries()."""
     import __spark_entry__ as entry
 
     q, o = entry.queries(), entry.oracle_sql()
     assert set(o) <= set(q), f"oracles without queries: {sorted(set(o) - set(q))}"
+    names = list(q)
+    nums = [int(n[1:].split("_", 1)[0]) for n in names]
+    assert len(set(nums)) == len(nums), "query numbers must be unique"
+    assert nums == sorted(nums), "queries() must be in ascending qNN order"
+    assert list(o) == [n for n in names if n in o]
 
 
 def test_bench_headline_covers_registry_or_names_reason():
@@ -261,150 +268,6 @@ def test_plans_md_covers_expensive_queries_and_is_current():
     plans = (ROOT / "docs" / "PLANS.md").read_text()
     stale = [n for n in dump_plans.NOTES if f"## {n}" not in plans]
     assert not stale, f"PLANS.md not regenerated for: {stale}"
-
-
-def test_driver_slot_rotation_covers_unproven_queries():
-    """The correctness driver hard-checks only the first 50 registry
-    entries.  Round-13 invariant (rotate by EVIDENCE AGE — the
-    round-5 verdict's standing rule, extended per round-12 ADVICE with
-    the REWORKED_AT discount): queries with no VALID green driver row
-    — never checked, only red, or reworked in lockstep since their
-    last green — outrank every recorded band.  Entering round 13 that
-    class is q240 (red r10/r11/r12) + q168/q224 (impl+oracle rewritten
-    in round 12, discounting their r10/r11 greens) + q305-q307 (the
-    round-13 bisect registrations) + q308-q312 (the round-13 operator
-    registrations); then the 6 r6-band leftovers and the 33 oldest
-    r7-band members.  All recomputed here from CORRECTNESS_r01..r12,
-    not trusted from the frozen set in the entry module."""
-    import json
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    assert len(names) == len(set(names))
-
-    def num(n: str) -> int:
-        return int(n[1:].split("_", 1)[0])
-
-    # newest VALID hash-green round per query across the recorded
-    # history through round ROUND-1, applying the rework discount
-    assert entry.ROUND == 13
-    newest_green: dict[str, int] = {}
-    for r in range(1, entry.ROUND):
-        d = json.loads((ROOT / f"CORRECTNESS_r{r:02d}.json").read_text())
-        for k, v in d.items():
-            if v.get("hash_match") and r >= entry.REWORKED_AT.get(num(k), 0):
-                newest_green[k] = r
-
-    first50 = set(names[:50])
-    assert len(first50) == 50
-    # the no-valid-green class, recomputed from the records, is
-    # exactly q168/q224 (reworked) + q240 (only-red) + q305-q312
-    # (the round-13 registrations)
-    stale = sorted((n for n in names if n not in newest_green), key=num)
-    assert [num(n) for n in stale] == [168, 224, 240] + list(range(305, 313))
-    # the head = the whole class + the 6 r6 leftovers + the 33 oldest
-    # r7-band members, and the frozen set in the entry module matches
-    # the recomputation exactly
-    r6_left = sorted((n for n in names if newest_green.get(n) == 6), key=num)
-    assert [num(n) for n in r6_left] == [58, 153, 174, 182, 183, 184]
-    r7_band = sorted((n for n in names if newest_green.get(n) == 7), key=num)
-    assert len(r7_band) == 50
-    expected = set(stale) | set(r6_left) | set(r7_band[:33])
-    assert first50 == expected
-    assert {num(n) for n in first50} == entry._R13_HEAD
-    # pacing: the r7 band sheds a 17-member tail (q111-q113 +
-    # q115-q118 + q185-q194) to round 14 — the bounded drift the
-    # README's evidence-paced rule allows
-    assert [num(n) for n in r7_band[33:]] == (
-        [111, 112, 113, 115, 116, 117, 118] + list(range(185, 195))
-    )
-    # every round-13 registration carries an oracle (zero no-evidence
-    # entries — the freeze-lift condition)
-    o = entry.oracle_sql()
-    for n in stale:
-        assert n in o, f"{n} registered without an oracle"
-    assert len(names) == 312
-    # oracle_sql iterates in the same rotated order (driver zips them)
-    ol = list(o)
-    assert ol == [n for n in names if n in set(ol)]
-
-
-def test_next_head_tool_matches_rotation_rule():
-    """tools/next_head.py IS the mechanical form of the evidence-age
-    rule — so EXECUTE it (round-11 ADVICE: the earlier version of this
-    test recomputed the rule inline, so the tool could drift
-    undetected).  Since round 13 the tool pins its record set to
-    CORRECTNESS_r01..r{ROUND-1} by default (round-12 ADVICE: the
-    all-files version turned this test red the moment the driver
-    dropped the next round's record mid-round), so its output is
-    deterministic regardless of which newer records exist on disk —
-    asserted below by forcing an explicit --through-round and
-    comparing.  Against the r01..r12 records the proposed head must
-    equal the entry module's first 50 exactly.  Then simulate round
-    14 (a synthetic r13 greening the current head) and assert the
-    rule hands the 17 deferred r7 members + the 33 oldest r8-band
-    members to the next head."""
-    import json as _json
-    import subprocess
-    import sys as _sys
-
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-
-    def run_tool(*extra):
-        out = subprocess.run(
-            [_sys.executable, str(ROOT / "tools" / "next_head.py"), *extra],
-            capture_output=True,
-            text=True,
-            cwd=str(ROOT),
-            check=True,
-        ).stdout
-        lines = out.splitlines()
-        start = next(
-            i for i, l in enumerate(lines) if l.startswith("proposed head")
-        )
-        return [l.strip() for l in lines[start + 1 : start + 51]]
-
-    # 1) run the actual tool: default (entry.ROUND-1 = r12 pin) and
-    # the explicit pin must agree — newer on-disk records are inert
-    tool_head = run_tool()
-    assert len(tool_head) == 50 and len(set(tool_head)) == 50
-    assert tool_head == run_tool("--through-round", str(entry.ROUND - 1))
-    # the tool prints no-valid-green-first, the entry sorts its head
-    # by number — the driver checks the first 50 as a SET, so that is
-    # the contract being pinned
-    assert set(tool_head) == set(names[:50]), (
-        "tools/next_head.py disagrees with the entry module's head"
-    )
-
-    # 2) simulate round 14: the current head goes green in r13
-    def num(n):
-        return int(n[1:].split("_", 1)[0])
-
-    newest = {}
-    for r in range(1, entry.ROUND):
-        d = _json.loads((ROOT / f"CORRECTNESS_r{r:02d}.json").read_text())
-        for k, v in d.items():
-            if v.get("hash_match") and r >= entry.REWORKED_AT.get(num(k), 0):
-                newest[k] = r
-    for k in names[:50]:
-        newest[k] = entry.ROUND
-
-    stale = sorted((n for n in names if n not in newest), key=num)
-    assert stale == []  # post-r13, every registered query holds green
-    r7_left = sorted((n for n in names if newest.get(n) == 7), key=num)
-    r8_band = sorted((n for n in names if newest.get(n) == 8), key=num)
-    assert [num(n) for n in r7_left] == (
-        [111, 112, 113, 115, 116, 117, 118] + list(range(185, 195))
-    )
-    head14 = r7_left + r8_band[: 50 - len(r7_left)]
-    assert len(head14) == 50
-    # the r8 band sheds its own 17-member tail to round 15 — the
-    # drift stays bounded while the registry is 312 (full re-green
-    # every ceil(312/50) = 7 rounds)
-    assert len(r8_band) - (50 - len(r7_left)) == 17
 
 
 def test_check_oracle_strict_mode_sees_sub_round9_drift():

@@ -1328,31 +1328,3 @@ def test_mann_kendall_flat_and_monotone_series(spark):
     assert out["flat"].s_stat == 0 and out["flat"].var_num == 0
     assert out["flat"].z == 0.0
 
-
-# ------------------------------------------- woe bisect surface parity
-
-
-def test_woe_bisect_surfaces_agree_with_public_woe_iv(spark):
-    # q305/q306's operators are PREFIXES of woe_iv's pipeline: the
-    # bucket counts must be identical, and the decimal surface must
-    # round to exactly the public round-6 doubles
-    ev = load(spark, SF, "events")
-    labeled = ev.select(
-        "value", (F.col("event_type") == "purchase").cast("int").alias("y")
-    )
-    kw = dict(value_col="value", label_col="y", n_buckets=10)
-    full = {r.bucket: r for r in evaluation.woe_iv(labeled, **kw).collect()}
-    cnt = {
-        r.bucket: r
-        for r in evaluation.woe_iv_buckets(labeled, **kw).collect()
-    }
-    dec = {
-        r.bucket: r
-        for r in evaluation.woe_iv_decimal(labeled, **kw).collect()
-    }
-    assert set(full) == set(cnt) == set(dec)
-    for b, f in full.items():
-        assert (cnt[b].n_pos, cnt[b].n_neg) == (f.n_pos, f.n_neg)
-        assert float(dec[b].woe) == f.woe
-        assert float(dec[b].iv_term) == f.iv_term
-        assert float(dec[b].iv) == f.iv

@@ -3,12 +3,15 @@ and BroadcastNestedLoopJoin is allowed only where a side is a scalar
 (1-row) broadcast or a deliberately tiny band dimension — the two
 shapes that stay O(n) at 100 TB. Every new query automatically comes
 under this guard; an unexpected nested loop is a plan regression the
-per-query tests might not be watching for."""
+per-query tests might not be watching for. The same one build per
+query also checks each result schema against its oracle's."""
 
 from __future__ import annotations
 
 import sys
 from pathlib import Path
+
+import pytest
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
@@ -52,8 +55,6 @@ BNL_ALLOWED = {
     "q230_ri_audit": "per-edge 1-row stats x 1-row orphan-counts crossed (8 edges)",
     "q232_seasonal_decompose": "hour spine x #event-types frame (both metadata-sized) crossed — the q181 shape",
     "q240_woe_iv": "1-row decile-cuts broadcast onto the value stream + 9-row fraction frame crossed onto the distinct-value histogram (the q224 discrete-cut shape)",
-    "q305_woe_iv_buckets": "1-row decile-cuts broadcast onto the value stream + 9-row fraction frame crossed onto the distinct-value histogram (q240's shape, truncated at the BIGINT counts)",
-    "q306_woe_iv_decimal": "1-row decile-cuts broadcast onto the value stream + 9-row fraction frame crossed onto the distinct-value histogram (q240's shape, decimal-typed outputs)",
     "q311_hill_tail_index": "1-row tail-threshold broadcast onto the 100-row top-frequency frame (both metadata-sized)",
     "q312_jackknife_shard_variance": "1-row corpus-totals broadcast onto the 16-row shard frame (the q100 shape)",
     "q250_jl_recall": "1-row projected-probe broadcast onto the corpus rankings",
@@ -80,28 +81,52 @@ BNL_ALLOWED = {
 }
 
 
-def test_no_unexpected_cross_or_nested_loop_joins(spark):
+@pytest.fixture(scope="module")
+def built(spark):
+    """Every registered query built once: name -> (executed plan text,
+    result schema), shared by the lint tests below."""
     import __spark_entry__ as entry
 
-    flagged = {}
+    out = {}
     for name, fn in entry.queries().items():
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        df = fn(spark, SF)
+        out[name] = (df._jdf.queryExecution().executedPlan().toString(), df.schema)
+    return out
+
+
+def test_no_unexpected_cross_or_nested_loop_joins(built):
+    flagged = {}
+    for name, (plan, _) in built.items():
         assert "CartesianProduct" not in plan, f"{name} plans a CartesianProduct"
         if "BroadcastNestedLoop" in plan and name not in BNL_ALLOWED:
             flagged[name] = "unexpected BroadcastNestedLoopJoin"
     assert not flagged, flagged
 
 
-def test_bnl_allowlist_is_not_stale(spark):
+def test_bnl_allowlist_is_not_stale(built):
     """Every allowlisted query must still actually plan a BNL — a
     stale entry means the plan changed and the justification with it."""
+    stale = [name for name in BNL_ALLOWED if "BroadcastNestedLoop" not in built[name][0]]
+    assert not stale, f"allowlist entries no longer planning BNL: {stale}"
+
+
+def test_result_types_match_oracle(built):
+    """Every query's Spark schema has the oracle's column names, and no
+    column carries a type hazard (tools/type_probe.classify): a value
+    that compares equal as text but is a DECIMAL on one engine and an
+    integer or double on the other."""
     import __spark_entry__ as entry
 
-    qs = entry.queries()
-    stale = [
-        name
-        for name in BNL_ALLOWED
-        if "BroadcastNestedLoop"
-        not in qs[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
-    ]
-    assert not stale, f"allowlist entries no longer planning BNL: {stale}"
+    sys.path.insert(0, str(ROOT / "tools"))
+    import type_probe
+
+    bad = {}
+    with type_probe.connect(SF) as con:
+        for name, sql in entry.oracle_sql().items():
+            schema = built[name][1]
+            oschema = type_probe.oracle_schema(con, sql)
+            if schema.names != oschema.names:
+                bad[name] = (schema.names, oschema.names)
+            elif diffs := type_probe.hazards(schema, oschema):
+                bad[name] = diffs
+    assert not bad, bad

@@ -79,8 +79,7 @@ def main():
     spark = get_spark("oracle-check")
     # engine-version provenance (round-12 verdict #4): every strict
     # sweep names the engines it exonerated — a different duckdb in
-    # another environment voids the attestation (see q240's history
-    # and the q307 version probe).
+    # another environment voids the attestation (see q240's history).
     from bench import engine_versions
 
     print("versions:", engine_versions())

@@ -1,15 +1,14 @@
 """Cross-engine result-TYPE sweep: for every declared query, compare the
 Spark result schema against the DuckDB oracle's Arrow schema.
 
-Round-14 root-cause instrument for the q240/q305/q306 driver reds: the
-driver's value hash is type-representation-sensitive where local
-check_oracle's str() compare is not.  Probing the full round-13 driver
-head showed perfect separation — the only queries whose oracle emits a
-DECIMAL column where Spark emits an integer (DuckDB ``list_sum`` returns
-HUGEINT -> arrow decimal128(38,0)) are exactly the three hash-red ones,
-while int32/int64 width skew (q101) is green.  So the fixable hazard
-class is: integer-vs-decimal (or double-vs-decimal) representation skew,
-which survives byte-identical data and identical engine versions.
+The hazard class is representation skew between the two engines'
+result columns: an integer or double column on one side that is a
+DECIMAL on the other (DuckDB's integer ``SUM`` and ``list_sum`` return
+HUGEINT, which Arrow carries as decimal128(38,0)), or two DECIMALs of
+different precision/scale.  Such a column passes a string or rounded
+value compare but fails any type-sensitive hash of the same values.
+Integer width skew (int32 vs int64) is tolerated.  The oracle's schema
+is read with ``LIMIT 0``, so no oracle runs to completion.
 
 Usage: python tools/type_probe.py [sf_dir] [query ...]
 Prints one line per query; exits 1 if any HAZARD rows were found.
@@ -24,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-# type pairs observed on driver-green queries => tolerated by the hash
+# (spark simpleString, arrow type) pairs that carry the same values
 BENIGN = {
     ("int", "int32"), ("int", "int64"), ("bigint", "int64"),
     ("bigint", "int32"), ("double", "double"), ("string", "string"),
@@ -44,22 +43,46 @@ def classify(stype: str, otype: str) -> str | None:
     return f"{stype} vs {otype}"
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of ``sf_dir``."""
+    from nyc_taxi_data_prediction_pyspark_spark.catalog import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def oracle_schema(con: duckdb.DuckDBPyConnection, sql: str):
+    """The oracle's Arrow result schema, read through LIMIT 0 (no rows)."""
+    return con.execute(f"SELECT * FROM ({sql}\n) LIMIT 0").arrow().schema
+
+
+def hazards(spark_schema, arrow_schema) -> list[tuple[str, str]]:
+    """(column, hazard) for each Spark column whose type does not carry
+    the oracle's representation; a column the oracle lacks is MISSING."""
+    otypes = {f.name: str(f.type) for f in arrow_schema}
+    return [
+        (f.name, d)
+        for f in spark_schema.fields
+        if (d := classify(f.dataType.simpleString(), otypes.get(f.name, "MISSING")))
+        is not None
+    ]
+
+
 def main() -> None:
     argv = list(sys.argv[1:])
     sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
     only = set(argv[1:])
 
     import __spark_entry__ as entrymod
-    from nyc_taxi_data_prediction_pyspark_spark.catalog import TABLES
     from nyc_taxi_data_prediction_pyspark_spark.session import get_spark
 
     spark = get_spark("type-probe")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = connect(sf_dir)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    hazards = []
+    red = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -67,28 +90,18 @@ def main() -> None:
             print(f"skip {name}: rows-only")
             continue
         try:
-            stypes = {
-                f.name: f.dataType.simpleString()
-                for f in fn(spark, sf_dir).schema.fields
-            }
-            tbl = con.execute(oracles[name]).arrow()
-            otypes = {f.name: str(f.type) for f in tbl.schema}
+            diffs = hazards(fn(spark, sf_dir).schema, oracle_schema(con, oracles[name]))
         except Exception as e:  # noqa: BLE001 — name the query, keep probing
             print(f"ERR  {name}: {type(e).__name__}: {e}")
-            hazards.append(name)
+            red.append(name)
             continue
-        diffs = [
-            (c, d)
-            for c in stypes
-            if (d := classify(stypes[c], otypes.get(c, "MISSING"))) is not None
-        ]
         if diffs:
-            hazards.append(name)
+            red.append(name)
             print(f"HAZARD {name}: {diffs}")
         else:
             print(f"ok   {name}")
-    print(f"\n{len(hazards)} hazards" + (f": {hazards}" if hazards else ""))
-    sys.exit(1 if hazards else 0)
+    print(f"\n{len(red)} hazards" + (f": {red}" if red else ""))
+    sys.exit(1 if red else 0)
 
 
 if __name__ == "__main__":

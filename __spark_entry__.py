@@ -7340,23 +7340,24 @@ def _kcenter_sql(k: int = 6, dim: int = 64, quant: int = 1_000_000) -> str:
     center's components and folding the running min-distance with
     LEAST; ties (d DESC, pid ASC). The final UNION enumerates the k
     selected rows plus the witness row (the covering radius). Same
-    dim guard as _kmeans_ctes."""
+    dim guard as _kmeans_ctes. Every CTE is MATERIALIZED: inlined, each
+    step m{i} would re-evaluate the whole chain before it."""
     head = f"""
-WITH chk AS (
+WITH chk AS MATERIALIZED (
   SELECT CASE WHEN MIN(len(embedding)) = {dim} AND MAX(len(embedding)) = {dim}
               THEN 1
               ELSE CAST(error('kcenter oracle unrolled for dim={dim} but embeddings differ') AS INTEGER)
          END AS ok
   FROM embeddings
 ),
-pts AS (
+pts AS MATERIALIZED (
   SELECT vec_id AS pid, t.pos,
          CAST(floor(CAST(embedding[t.pos] AS DOUBLE) * {quant}) AS BIGINT) AS q
   FROM embeddings CROSS JOIN generate_series(1, {dim}) t(pos) CROSS JOIN chk
   WHERE chk.ok = 1
 ),
-s1 AS (SELECT MIN(pid) AS pid, CAST(0 AS BIGINT) AS d FROM pts),
-m1 AS (
+s1 AS MATERIALIZED (SELECT MIN(pid) AS pid, CAST(0 AS BIGINT) AS d FROM pts),
+m1 AS MATERIALIZED (
   SELECT p.pid, CAST(SUM((p.q - c.q) * (p.q - c.q)) AS BIGINT) AS d
   FROM pts p
   JOIN pts c ON p.pos = c.pos AND c.pid = (SELECT pid FROM s1)
@@ -7366,8 +7367,8 @@ m1 AS (
     steps = []
     for i in range(2, k + 1):
         steps.append(f""",
-s{i} AS (SELECT pid, d FROM m{i - 1} ORDER BY d DESC, pid ASC LIMIT 1),
-m{i} AS (
+s{i} AS MATERIALIZED (SELECT pid, d FROM m{i - 1} ORDER BY d DESC, pid ASC LIMIT 1),
+m{i} AS MATERIALIZED (
   SELECT m.pid, LEAST(m.d, x.d2) AS d
   FROM m{i - 1} m JOIN (
     SELECT p.pid, CAST(SUM((p.q - c.q) * (p.q - c.q)) AS BIGINT) AS d2

@@ -1,23 +1,18 @@
-"""Benchmark harness (driver contract).
+"""Benchmark harness.
 
 Runs the headline queries from ``__spark_entry__.queries()`` at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``.  Stdout ends with ONE compact JSON line
-(the driver-parsed record):
+``local[$SPARK_GRAFT_CPUS]``.  Stdout ends with ONE compact JSON line:
     {"metric": ..., "value": total_sec, "unit": "sec",
      "n_queries": N, "queries": {qNN: sec, ... top-20 slowest},
      "detail_file": ..., "sf": ...}
-The FULL per-query record (all timings, long names, per-table data
-stats, canary) is written to ``BENCH_DETAIL_sf{sf}_latest.json`` in
-the repo root — committed per round as the self-contained artifact.
-At 169+ queries even a compact full per-query dict outgrows the
-driver's tail-capture window (BENCH_r04 and BENCH_r06 both lost
-their parsed tails), so the final line carries a digest + top-20
-only, guaranteed to fit.
+The full per-query record (all timings, per-table data stats,
+canaries, core count, engine versions) is written to
+``BENCH_DETAIL_sf{label}.json`` in the repo root: one record per scale.
 
-Each query is executed to completion (count() action — results are
-small aggregates or bounded top-k frames; the count forces the full
-plan without driver-side materialization of wide rows).
+Each query is timed to its complete result: ``force`` writes it to a
+``noop`` sink, so every output column is computed (a ``.count()`` lets
+Catalyst prune aggregate expressions and undercounts).
 """
 
 from __future__ import annotations
@@ -34,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # plus the streaming/maintenance operators (corpus ingest, stream-stream
 # attribution, incremental rollup) and the sideways-info-passing /
 # diff operators (bloom semi-join, table diff) so their cost is
-# tracked round-over-round.
+# tracked record over record.
 HEADLINE = [
     "q01_pricing_summary",
     "q05_clean_contract",
@@ -359,9 +354,8 @@ HEADLINE_SKIP = {
 
 def engine_versions() -> dict:
     """Version provenance for every engine a correctness/bench claim
-    depends on (round-12 verdict: record these with each artifact so
-    cross-environment skew — the leading q240 hypothesis — is a
-    recorded fact instead of a guess)."""
+    depends on, recorded with each artifact so cross-environment skew
+    is a recorded fact instead of a guess."""
     import platform
 
     import duckdb
@@ -374,25 +368,27 @@ def engine_versions() -> dict:
     }
 
 
+def force(df) -> None:
+    """Compute every output column of ``df`` and discard the rows."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def run_canary(spark) -> dict:
-    """Pinned micro-canary (round-3 verdict ask): two fixed workloads
-    whose cost depends ONLY on the host + Spark build, never on the
-    testdata — so a uniform round-over-round shift in query timings can
-    be attributed to environment drift (canary moved too) vs plan
-    regressions (canary flat).
+    """Pinned micro-canaries whose cost depends ONLY on the host and the
+    Spark build, never on the testdata, so a uniform shift in query
+    timings can be attributed to environment drift (canary moved too)
+    or to plan regressions (canary flat).
 
     - ``range_agg``: CPU/codegen-bound — sum over a fixed-size range
       with a modulo, zero I/O.
     - ``parquet_scan``: I/O + decode-bound — scan-agg over a parquet
-      file GENERATED HERE with fixed content (same rows every round;
-      byte size recorded so even an encoder change is visible).
-    - ``sched_20job``: scheduler-fixed-overhead-bound (round-7 verdict
-      ask) — 20 sequential one-row jobs whose work is nil, so the
-      wall is 20× (job submit + DAG build + task launch + result
-      fetch).  The suite is dominated by multi-job queries whose cost
-      is fixed overhead, which ``range_agg`` (one big job) cannot
-      see; with both canaries, scan-speed drift and scheduler-jitter
-      drift are separately normalizable round-over-round.
+      file GENERATED HERE with fixed content (byte size recorded so
+      even an encoder change is visible).
+    - ``sched_20job``: scheduler-fixed-overhead-bound — 20 sequential
+      one-row jobs whose work is nil, so the wall is 20× (job submit +
+      DAG build + task launch + result fetch).  Many queries are
+      dominated by per-job fixed overhead, which ``range_agg`` (one big
+      job) cannot see.
 
     min-of-3 each, same estimator as the query timings.
     """
@@ -448,10 +444,10 @@ def run_canary(spark) -> dict:
 
 
 def sf_table_stats(spark, sf_dir: str) -> dict:
-    """Per-table (rows, bytes) of the bench SF dir — recorded in every
-    BENCH file so a driver-side testdata regeneration between rounds
-    (it has happened: ns->us timestamps) is measurable, not guessed.
-    Row counts come from parquet footers (metadata-only scan)."""
+    """Per-table (rows, bytes) of the bench SF dir, recorded in every
+    record so a testdata regeneration between records (it has
+    happened: ns->us timestamps) is measurable, not guessed.  Row
+    counts come from parquet footers (metadata-only scan)."""
     stats = {}
     for name in sorted(os.listdir(sf_dir)):
         if not name.endswith(".parquet"):
@@ -475,9 +471,7 @@ def sf_table_stats(spark, sf_dir: str) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # effective core count: what the session actually runs with
-    # (local[$SPARK_GRAFT_CPUS]) — round-13 verdict #2: reporting
-    # os.cpu_count() here mislabeled the driver's 8-core scaling run
-    # as "cpus": 32.
+    # (local[$SPARK_GRAFT_CPUS]), not os.cpu_count()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     import __spark_entry__ as entry
 
@@ -487,8 +481,7 @@ def main() -> None:
     # Silence the benign DAGScheduler "attempted to access non-existent
     # accumulator" ERROR (a localCheckpoint/ContextCleaner race on GC'd
     # stage accumulators; rc stays 0 and results are unaffected): its
-    # multi-page stack otherwise opens the driver's tail-capture window
-    # and crowds out the digest line (round-7 verdict item).  Scoped to
+    # multi-page stack otherwise buries the final JSON line.  Scoped to
     # the one logger, bench-process only — library code never touches
     # log levels.
     try:
@@ -502,7 +495,7 @@ def main() -> None:
     qs = entry.queries()
 
     # pinned environment canary FIRST (cold-ish host state is part of
-    # what it measures round-over-round; queries get their own warm-up)
+    # what it measures; queries get their own warm-up)
     canary = run_canary(spark)
     tables = sf_table_stats(spark, sf_dir)
 
@@ -513,7 +506,7 @@ def main() -> None:
     warm_sf = "/root/testdata/sf0.001"
     for name in HEADLINE:
         try:
-            qs[name](spark, warm_sf).count()
+            force(qs[name](spark, warm_sf))
         except Exception as e:  # noqa: BLE001 — name the query, keep benching
             print(
                 f"WARNING: warm-up failed for {name} ({type(e).__name__}: {e}) — "
@@ -522,30 +515,26 @@ def main() -> None:
                 file=sys.stderr,
             )
 
+    def timed(name: str) -> float:
+        t0 = time.perf_counter()
+        force(qs[name](spark, sf_dir))
+        return round(time.perf_counter() - t0, 3)
+
     # N full timed passes, min per query: the host is a shared VM and
     # single-shot timings carry multi-second noisy-neighbor stalls; the
     # minimum is the standard least-noise estimator of true cost.
-    # Per-query best-of-N plus N are recorded so round-over-round
-    # regressions are attributable to plans, not host noise.
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
     timings: dict[str, float] = {}
     for _pass in range(n_passes):
         for name in HEADLINE:
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            dt = round(time.perf_counter() - t0, 3)
+            dt = timed(name)
             timings[name] = min(timings.get(name, dt), dt)
 
     # noisy-host guard: the most expensive queries dominate the total
     # and are exactly where a noisy-neighbor stall inflates min-of-N,
-    # so buy each of them one extra sample (cost ≈ a fraction of one
-    # full pass, bounded by the top-k cutoff)
-    retry = sorted(timings, key=timings.get, reverse=True)[:8]
-    for name in retry:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).count()
-        dt = round(time.perf_counter() - t0, 3)
-        timings[name] = min(timings[name], dt)
+    # so buy each of them one extra sample
+    for name in sorted(timings, key=timings.get, reverse=True)[:8]:
+        timings[name] = min(timings[name], timed(name))
 
     total = round(sum(timings.values()), 3)
     # label from the BASENAME only (a dir without "sf" in its name —
@@ -554,41 +543,28 @@ def main() -> None:
     base = os.path.basename(sf_dir.rstrip("/"))
     sf = base.rsplit("sf", 1)[-1] if "sf" in base else base
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Full record (every per-query timing, long names, per-table data
-    # stats) is COMMITTED TO A FILE, not trusted to stdout: at 169
-    # headline queries even the compact per-query dict outgrew the
-    # driver's tail-capture window (BENCH_r04 and BENCH_r06 both
-    # recorded `parsed: null` / truncated tails). The file is the
-    # self-contained record; the final stdout line is a digest whose
-    # total must match it.
     detail = {
         "queries": timings,
         "total_sec": total,
         "n_queries": len(timings),
         "stat": "min_of_passes",
+        "action": "noop_write",
         "passes": n_passes,
         "sf": sf_val,
         "sf_tables": tables,
         "canary": canary,
         "cpus": cpus,
-        # engine-version provenance (round-12 verdict #4): the driver
-        # commits this file each round, so whatever environment RAN
-        # this bench — driver or builder — self-records here.  A
-        # driver-side duckdb differing from the builder's would
-        # explain the q240 correctness history on its own.
         "versions": engine_versions(),
     }
     detail_file = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_DETAIL_sf{sf}_latest.json",
+        os.path.dirname(os.path.abspath(__file__)), f"BENCH_DETAIL_sf{sf}.json"
     )
     with open(detail_file, "w") as fh:
         json.dump(detail, fh, indent=1)
     print("BENCH_DETAIL written to " + detail_file)
-    # Driver contract: the LAST stdout line is ONE compact JSON object,
-    # GUARANTEED to fit the tail-capture window: digest fields plus
-    # only the top-20 slowest per-query timings (the full dict lives
-    # in the detail file above).
+    # the LAST stdout line is ONE compact JSON object: digest fields
+    # plus only the top-20 slowest per-query timings (the full dict
+    # lives in the detail file above)
     top20 = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:20]
     )

@@ -13,6 +13,7 @@ row pipeline).
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -91,3 +92,35 @@ def exchange_count(df: DataFrame) -> int:
     return physical_plan(df).count("Exchange hashpartitioning") + physical_plan(df).count(
         "Exchange rangepartitioning"
     )
+
+
+# Fingerprint field -> the physical node names it counts.  ``python``
+# lists every node that hands rows to a Python worker (the pre-4.0
+# names are kept so an older runtime counts the same nodes).
+FINGERPRINT_NODES = {
+    "exchange": ("Exchange",),
+    "bhj": ("BroadcastHashJoin",),
+    "smj": ("SortMergeJoin",),
+    "bnlj": ("BroadcastNestedLoopJoin",),
+    "python": (
+        "BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
+        "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
+        "FlatMapGroupsInArrow", "FlatMapCoGroupsInArrow",
+        "AggregateInPandas", "ArrowAggregatePython",
+        "WindowInPandas", "ArrowWindowPython",
+        "FlatMapGroupsInPandasWithState",
+        "BatchEvalPythonUDTF", "ArrowEvalPythonUDTF",
+    ),
+}
+
+# a tree line's node name: after the ``+- ``/``:- `` indent and an
+# optional ``*(n) `` codegen-stage prefix
+_NODE_NAME = re.compile(r"^[ :+-]*(?:\*\(\d+\) )?(\w+)", re.M)
+
+
+def plan_fingerprint(plan: str) -> dict[str, int]:
+    """Node counts of an executed-plan text, one per FINGERPRINT_NODES
+    field.  Whole node names only: a ``BroadcastExchange`` or a
+    ``ReusedExchange`` is not an ``Exchange``."""
+    names = Counter(_NODE_NAME.findall(plan))
+    return {k: sum(names[n] for n in nodes) for k, nodes in FINGERPRINT_NODES.items()}

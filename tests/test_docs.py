@@ -5,6 +5,7 @@ stale numbers (round-1 advice)."""
 
 from __future__ import annotations
 
+import json
 import re
 import sys
 from pathlib import Path
@@ -43,17 +44,8 @@ def test_readme_counts_match_entry_surface():
     assert m, "README lost its check_oracle coverage line"
     assert int(m.group(1)) == n_q
 
-    # the record sentence is pinned to the OFFICIAL record file's
-    # totals so prose can't drift from the artifact (round-8 verdict).
-    # Official = BENCH_OFFICIAL_sf0.1.json, a builder-owned snapshot
-    # promoted from a calm-canary run — NOT the driver-volatile
-    # BENCH_DETAIL_sf0.1_latest.json, which the driver overwrites
-    # (and, since r9, commits) with a jitterier rerun every round:
-    # two consecutive rounds a guard pinned to the _latest file (or
-    # to `git show HEAD:` of it) flipped red on that overwrite.
-    import json
-
-    detail = json.loads((ROOT / "BENCH_OFFICIAL_sf0.1.json").read_text())
+    # the record sentence is pinned to the committed sf0.1 record
+    detail = _sf01_record()
     m = re.search(
         r"Latest committed record: ([\d.]+)s for (\d+) queries", text
     )
@@ -114,106 +106,10 @@ def test_bench_headline_covers_registry_or_names_reason():
             assert ref in hl_nums, (name, ref, "names an un-benched sibling")
 
 
-def _official_detail() -> dict:
-    """The builder-owned official sf0.1 record — the ONLY bench
-    artifact doc guards may pin prose or thresholds to.  The driver
-    overwrites (and commits) BENCH_DETAIL_sf0.1_latest.json with a
-    jitterier rerun every round by design, so any guard reading that
-    file — working tree OR `git show HEAD:` — flips red post-close
-    (it did, twice, in rounds 8 and 9).  Promotion is a deliberate
-    builder act: copy a calm-canary _latest into
-    BENCH_OFFICIAL_sf0.1.json and update the README record sentence
-    in the same commit."""
-    import json
-
-    return json.loads((ROOT / "BENCH_OFFICIAL_sf0.1.json").read_text())
-
-
-def test_doc_guards_never_read_the_driver_volatile_detail_file():
-    """Simulates the failure class directly: the driver-overwritten
-    _latest file must not feed any prose/threshold guard.  Round-10
-    ADVICE hardening: scan EVERY module under tests/ plus the tools
-    guards consume (dump_plans), and flag the bare filename in any
-    non-docstring string constant — including spellings built by
-    constant concatenation — not just one exact Path expression in
-    this file.  Comments and docstrings (which explain the rule) stay
-    allowed.  bench.py (the writer) and tools/promote_record.py (the
-    promotion SOURCE — a deliberate builder act, not a guard) are the
-    two legitimate users and are excluded."""
-    import ast
-
-    # round-11 ADVICE: flag the bare detail-file PREFIX, not just the
-    # full _latest spelling — an f-string/format/%-built "..._latest"
-    # would evade a full-spelling scan, but its constant fragments
-    # still contain the prefix
-    volatile = "BENCH_DETAIL" + "_sf0.1"  # split: don't match self
-
-    def code_strings(path: Path) -> list[str]:
-        """All string constants in the file that are NOT docstrings,
-        with adjacent Constant+Constant concatenation folded (the
-        evasion this very test uses for its own needle) AND f-string
-        (JoinedStr) constant fragments included — round-11 ADVICE:
-        a spelling built via f-string interpolation must not evade
-        the scan."""
-        tree = ast.parse(path.read_text())
-        doc_ids = set()
-        for node in ast.walk(tree):
-            if isinstance(
-                node,
-                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
-            ):
-                body = getattr(node, "body", [])
-                if (
-                    body
-                    and isinstance(body[0], ast.Expr)
-                    and isinstance(body[0].value, ast.Constant)
-                    and isinstance(body[0].value.value, str)
-                ):
-                    doc_ids.add(id(body[0].value))
-        out = []
-        for node in ast.walk(tree):
-            if (
-                isinstance(node, ast.Constant)
-                and isinstance(node.value, str)
-                and id(node) not in doc_ids
-            ):
-                out.append(node.value)
-            elif isinstance(node, ast.BinOp) and isinstance(node.op, ast.Add):
-                lhs, rhs = node.left, node.right
-                if (
-                    isinstance(lhs, ast.Constant)
-                    and isinstance(lhs.value, str)
-                    and isinstance(rhs, ast.Constant)
-                    and isinstance(rhs.value, str)
-                ):
-                    out.append(lhs.value + rhs.value)
-            elif isinstance(node, ast.JoinedStr):
-                # fold an f-string's constant fragments (interpolated
-                # slots become a marker so the joined text is visibly
-                # an f-string in a failure message)
-                out.append(
-                    "".join(
-                        v.value
-                        if isinstance(v, ast.Constant) and isinstance(v.value, str)
-                        else "{…}"
-                        for v in node.values
-                    )
-                )
-        return out
-
-    guard_files = sorted((ROOT / "tests").glob("*.py")) + [
-        ROOT / "tools" / "dump_plans.py"
-    ]
-    offenders = []
-    for path in guard_files:
-        hits = [s for s in code_strings(path) if volatile in s]
-        if path.name == "test_docs.py":
-            # this test's own folded needle is the one allowed hit
-            hits = [s for s in hits if s != volatile]
-        if hits:
-            offenders.append((path.name, hits))
-    assert not offenders, offenders
-    assert "BENCH_OFFICIAL_sf0.1" in (ROOT / "tests" / "test_docs.py").read_text()
+def _sf01_record() -> dict:
+    """The committed sf0.1 bench record (bench.py writes one record per
+    scale); the prose and threshold guards below read it."""
+    return json.loads((ROOT / "BENCH_DETAIL_sf0.1.json").read_text())
 
 
 def _expensive_threshold(detail: dict) -> float:
@@ -228,12 +124,11 @@ def _expensive_threshold(detail: dict) -> float:
 
 
 def test_every_expensive_bench_query_has_scale_probe():
-    """README claims every query ≥2 s at the latest official record
-    carries an isolated 10× scale probe in docs/SCALING.md — round-6
-    verdict found three missing (q182/q183/q220).  Guard the claim:
-    read the official sf0.1 bench record, find every ≥2 s query, and
+    """README claims every query ≥2 s in the committed sf0.1 record
+    carries an isolated 10× scale probe in docs/SCALING.md.  Guard the
+    claim: read the sf0.1 bench record, find every ≥2 s query, and
     require a SCALING.md mention."""
-    detail = _official_detail()
+    detail = _sf01_record()
     thr = _expensive_threshold(detail)
     scaling = (ROOT / "docs" / "SCALING.md").read_text()
     missing = [
@@ -242,32 +137,6 @@ def test_every_expensive_bench_query_has_scale_probe():
         if sec >= thr and name.split("_", 1)[0] not in scaling
     ]
     assert not missing, missing
-
-
-def test_plans_md_covers_expensive_queries_and_is_current():
-    """PLANS.md staleness guard (round-7 verdict item): every query
-    ≥2 s at the committed sf0.1 record must have plan evidence — a
-    NOTES entry in tools/dump_plans.py (rendered into docs/PLANS.md)
-    or a reasoned PLANS_SKIP entry (streaming store-readout plans).
-    And PLANS.md must actually be regenerated after NOTES grows: every
-    NOTES key must have a '## <name>' section in the committed file."""
-    sys.path.insert(0, str(ROOT / "tools"))
-    import dump_plans
-
-    detail = _official_detail()
-    thr = _expensive_threshold(detail)
-    covered = set(dump_plans.NOTES) | set(dump_plans.PLANS_SKIP)
-    missing = [
-        name
-        for name, sec in detail["queries"].items()
-        if sec >= thr and name not in covered
-    ]
-    assert not missing, missing
-    for name, reason in dump_plans.PLANS_SKIP.items():
-        assert reason.strip(), name
-    plans = (ROOT / "docs" / "PLANS.md").read_text()
-    stale = [n for n in dump_plans.NOTES if f"## {n}" not in plans]
-    assert not stale, f"PLANS.md not regenerated for: {stale}"
 
 
 def test_check_oracle_strict_mode_sees_sub_round9_drift():
@@ -296,74 +165,18 @@ def test_check_oracle_strict_mode_sees_sub_round9_drift():
     assert cols == ["a_col", "b_col"] and rows == [("2", "1")]
 
 
-def test_promote_record_tool_refuses_jitter_and_rewrites_readme(tmp_path, monkeypatch, capsys):
-    """tools/promote_record.py is the mechanical form of the official-
-    record promotion: refuse a slower-at-no-calmer-canary candidate,
-    and on promotion move the artifact and the README sentence
-    TOGETHER (the invariant test_readme_counts_match_entry_surface
-    pins)."""
-    import json
-
-    sys.path.insert(0, str(ROOT / "tools"))
-    import promote_record as pr
-
-    official = tmp_path / "BENCH_OFFICIAL_sf0.1.json"
-    readme = tmp_path / "README.md"
-    cand = tmp_path / "cand.json"
-    official.write_text(json.dumps({
-        "total_sec": 260.0, "n_queries": 221,
-        "canary": {"sched_20job": 1.6},
-    }))
-    readme.write_text("x Latest committed record: 260.0s for 221 queries y")
-    monkeypatch.setattr(pr, "OFFICIAL", str(official))
-    monkeypatch.setattr(pr, "README", str(readme))
-
-    # jittery candidate: slower, canary no calmer -> refused
-    cand.write_text(json.dumps({
-        "total_sec": 280.0, "n_queries": 221,
-        "canary": {"sched_20job": 1.65},
-    }))
-    monkeypatch.setattr(sys, "argv", ["promote_record.py", str(cand)])
+def test_bench_force_computes_every_output_column(spark):
+    """bench.force (shared with tools/profile_queries.py) evaluates
+    every output column: a ``.count()`` prunes the aggregate below and
+    never raises."""
     import pytest
+    from pyspark.sql import functions as F
 
-    with pytest.raises(SystemExit):
-        pr.main()
-    assert json.loads(official.read_text())["total_sec"] == 260.0
+    import bench
 
-    # truncated run: fewer queries, deceptively faster total -> refused
-    # without --force (round-10 ADVICE: totals are incomparable across
-    # different headline sets)
-    cand.write_text(json.dumps({
-        "total_sec": 120.0, "n_queries": 180,
-        "canary": {"sched_20job": 1.3},
-    }))
-    with pytest.raises(SystemExit):
-        pr.main()
-    assert json.loads(official.read_text())["total_sec"] == 260.0
-
-    # slower-but-calmer candidate -> promoted, with an explicit
-    # regression warning printed (round-10 ADVICE)
-    cand.write_text(json.dumps({
-        "total_sec": 262.0, "n_queries": 221,
-        "canary": {"sched_20job": 1.2},
-    }))
-    pr.main()
-    assert json.loads(official.read_text())["total_sec"] == 262.0
-    assert "promoting a SLOWER total" in capsys.readouterr().out
-
-    # missing canary -> warned, totals-only compare still promotes
-    cand.write_text(json.dumps({
-        "total_sec": 255.0, "n_queries": 221,
-    }))
-    pr.main()
-    assert json.loads(official.read_text())["total_sec"] == 255.0
-    assert "canary missing" in capsys.readouterr().out
-
-    # faster candidate -> promoted, README sentence rewritten in step
-    cand.write_text(json.dumps({
-        "total_sec": 250.5, "n_queries": 221,
-        "canary": {"sched_20job": 1.3},
-    }))
-    pr.main()
-    assert json.loads(official.read_text())["total_sec"] == 250.5
-    assert "Latest committed record: 250.5s for 221 queries" in readme.read_text()
+    df = spark.range(3).groupBy().agg(
+        F.max(F.raise_error(F.lit("column forced"))).alias("x")
+    )
+    assert df.count() == 1
+    with pytest.raises(Exception, match="column forced"):
+        bench.force(df)

@@ -4,10 +4,12 @@ and BroadcastNestedLoopJoin is allowed only where a side is a scalar
 shapes that stay O(n) at 100 TB. Every new query automatically comes
 under this guard; an unexpected nested loop is a plan regression the
 per-query tests might not be watching for. The same one build per
-query also checks each result schema against its oracle's."""
+query also checks each result schema against its oracle's, and each
+plan's node counts against docs/plan_fingerprints.json."""
 
 from __future__ import annotations
 
+import json
 import sys
 from pathlib import Path
 
@@ -86,11 +88,12 @@ def built(spark):
     """Every registered query built once: name -> (executed plan text,
     result schema), shared by the lint tests below."""
     import __spark_entry__ as entry
+    from nyc_taxi_data_prediction_pyspark_spark.plans.explain import physical_plan
 
     out = {}
     for name, fn in entry.queries().items():
         df = fn(spark, SF)
-        out[name] = (df._jdf.queryExecution().executedPlan().toString(), df.schema)
+        out[name] = (physical_plan(df), df.schema)
     return out
 
 
@@ -130,3 +133,23 @@ def test_result_types_match_oracle(built):
             elif diffs := type_probe.hazards(schema, oschema):
                 bad[name] = diffs
     assert not bad, bad
+
+
+def test_plan_fingerprints_match(built):
+    """docs/plan_fingerprints.json is the committed plan evidence: per
+    query, the Exchange / broadcast-hash / sort-merge / nested-loop join
+    and Python-eval node counts of its executed plan at sf0.001.  A plan
+    change must show up in the diff of that file, never silently."""
+    from nyc_taxi_data_prediction_pyspark_spark.plans.explain import plan_fingerprint
+
+    want = json.loads((ROOT / "docs" / "plan_fingerprints.json").read_text())
+    got = {name: plan_fingerprint(plan) for name, (plan, _) in built.items()}
+    diff = [
+        f"{name}: committed {want.get(name)}, built {got.get(name)}"
+        for name in sorted(want.keys() | got.keys())
+        if want.get(name) != got.get(name)
+    ]
+    assert not diff, (
+        "plan fingerprints differ; if the plan change is intended, "
+        "regenerate with `python tools/dump_plans.py`:\n" + "\n".join(diff)
+    )

@@ -1,17 +1,27 @@
-"""Generate docs/PLANS.md: formatted physical plans of the headline
-queries + the plan properties we engineered for (pushdown, broadcast,
-partial agg, no cartesian, TakeOrdered). Re-run after plan-affecting
-changes: python tools/dump_plans.py
+"""Plan evidence for the registered queries, built at sf0.001 in a
+session set up like the tests' (tests/conftest.py).
+
+- No arguments: rewrite docs/plan_fingerprints.json, one line per
+  query (qNN order) with ``plans.explain.plan_fingerprint``'s node
+  counts of its executed plan.  tests/test_plan_lint.py checks the file
+  against the plans it builds; re-run this after a plan-affecting
+  change.
+- Query names: print each query's formatted physical plan, with its
+  engineered-property note from NOTES when it has one.
+
+Usage: python tools/dump_plans.py [query ...]
 """
 
 from __future__ import annotations
 
-import io
+import json
 import os
 import sys
-from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+FINGERPRINTS = os.path.join(ROOT, "docs", "plan_fingerprints.json")
+SF = "/root/testdata/sf0.001"
 
 NOTES = {
     "q01_pricing_summary": "one shuffle (group keys); decimal sums keep partial aggregation",
@@ -220,51 +230,32 @@ NOTES = {
     "q312_jackknife_shard_variance": "one md5-shard aggregation pass; loo/variance algebra on the 16-row frame via 1-row totals broadcast",
 }
 
-# Streaming/stateful queries whose query() call EXECUTES a stream and
-# returns the store readout: the captured plan would be a bare store
-# scan, not the engineered pipeline — their plan evidence is the
-# operator docstring + docs/SCALING.md row instead.  The staleness
-# guard (tests/test_docs.py) checks every expensive query appears in
-# NOTES or here, with a reason.
-PLANS_SKIP = {
-    "q104_streaming_corpus_ingest": "availableNow stream; plan = store readout; see SCALING 'q104'",
-    "q123_scd2_history": "two-batch SCD2 fold via Warehouse.scd2_merge; returned plan = versioned-dim store scan; merge plan evidence in SCALING 'q123'",
-    "q108_stream_attribution": "stream-stream join via micro-batches; plan = result-store scan",
-    "q114_incremental_rollup": "incremental maintenance loop; plan = rollup-store scan",
-    "q264_stream_funnel": "applyInPandasWithState fold; plan = funnel-store scan",
-    "q277_streaming_cdc_upsert": "micro-batch struct-max upsert fold; plan = store scan + readout agg",
-}
-
 
 def main() -> None:
     import __spark_entry__ as e
-    from nyc_taxi_data_prediction_pyspark_spark.plans import explain as ex
+    from nyc_taxi_data_prediction_pyspark_spark.plans.explain import (
+        physical_plan,
+        plan_fingerprint,
+    )
     from nyc_taxi_data_prediction_pyspark_spark.session import get_spark
 
-    sf = "/root/testdata/sf0.01"
     spark = get_spark("plans")
     qs = e.queries()
-    out = ["# Physical plans — headline queries",
-           "",
-           "Generated by `tools/dump_plans.py` (sf0.01). Each section: the plan",
-           "property the operator was engineered to have, then the formatted plan",
-           "Catalyst actually produced.", ""]
-    for name, note in NOTES.items():
-        df = qs[name](spark, sf)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        out += [f"## {name}", "", f"**Engineered property:** {note}", "",
-                f"- exchanges: {ex.exchange_count(df)}",
-                f"- broadcast join: {ex.has_broadcast_join(df)}",
-                f"- cartesian/nested-loop: {ex.has_cartesian(df)}",
-                f"- TakeOrderedAndProject: {ex.uses_take_ordered(df)}",
-                f"- partial aggregation: {ex.has_partial_aggregate(df)}",
-                "", "```", buf.getvalue().strip(), "```", ""]
-    os.makedirs("docs", exist_ok=True)
-    with open("docs/PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote docs/PLANS.md ({len(out)} lines)")
+    names = sys.argv[1:]
+    for name in names:
+        print(f"## {name}\n")
+        if name in NOTES:
+            print(f"Engineered property: {NOTES[name]}\n")
+        qs[name](spark, SF).explain("formatted")
+    if names:
+        return
+    lines = [
+        f"{json.dumps(name)}: {json.dumps(plan_fingerprint(physical_plan(fn(spark, SF))))}"
+        for name, fn in qs.items()
+    ]
+    with open(FINGERPRINTS, "w") as fh:
+        fh.write("{\n" + ",\n".join(lines) + "\n}\n")
+    print(f"wrote {FINGERPRINTS} ({len(lines)} queries)")
 
 
 if __name__ == "__main__":

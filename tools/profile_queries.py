@@ -1,7 +1,6 @@
-"""Per-query profiler for the optimization rounds (guide §1: measure
-first).  For each named query (default: the top-N slowest from the
-latest BENCH_DETAIL), runs a warm-up pass and then times the full
-result through a ``noop`` sink, and records:
+"""Per-query profiler.  For each named query (default: the top-N
+slowest in ``BENCH_DETAIL_sf0.1.json``), runs a warm-up pass and then
+times the full result through a ``noop`` sink, and records:
 
 - wall seconds (min of N passes, same estimator as bench.py),
 - the number of Spark JOBS the query triggers (statusTracker job ids
@@ -11,10 +10,9 @@ result through a ``noop`` sink, and records:
 - the number of stages across those jobs (each extra stage ≈ one
   shuffle boundary or retry).
 
-The action is ``df.write.format("noop")`` in both the warm-up and the
-timed passes: every output column is forced, so Catalyst cannot prune
-aggregate expressions the way a ``.count()`` lets it, and the job
-counts come from the plan a consumer of the whole result runs.
+The action is bench.py's ``force`` (a ``noop`` write) in both the
+warm-up and the timed passes, so the job counts come from the plan a
+consumer of the whole result runs.
 
 Usage: python tools/profile_queries.py [sf_dir] [q... | -n TOPN]
 Output: one JSON line per query to stdout + a summary table.
@@ -29,9 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+from bench import force  # noqa: E402
 
 
 def main() -> None:
@@ -62,7 +58,7 @@ def main() -> None:
     if not names:
         detail = os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "BENCH_DETAIL_sf0.1_latest.json",
+            "BENCH_DETAIL_sf0.1.json",
         )
         with open(detail) as fh:
             timings = json.load(fh)["queries"]
@@ -79,7 +75,7 @@ def main() -> None:
     warm = "/root/testdata/sf0.001"
     for n in names:
         try:
-            _force(qs[n](spark, warm))
+            force(qs[n](spark, warm))
         except Exception as e:  # noqa: BLE001
             print(f"WARN warmup {n}: {type(e).__name__}: {e}", file=sys.stderr)
 
@@ -90,7 +86,7 @@ def main() -> None:
             group = f"prof_{n}_{p}"
             sc.setJobGroup(group, n)
             t0 = time.perf_counter()
-            _force(qs[n](spark, sf_dir))
+            force(qs[n](spark, sf_dir))
             dt = time.perf_counter() - t0
             sc.setJobGroup(None, None)
             job_ids = tracker.getJobIdsForGroup(group)

@@ -11,7 +11,9 @@ column name).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
 import tempfile
 import uuid
@@ -45,6 +47,14 @@ from nyc_taxi_data_prediction_pyspark_spark.ml import forecast
 from nyc_taxi_data_prediction_pyspark_spark.ml.embeddings import with_embeddings
 
 SF0001 = "/root/testdata/sf0.001"
+
+
+def _work_dir(prefix: str) -> str:
+    """A fresh directory under TMPDIR for one query's checkpoints,
+    stores or warehouse root, removed when the interpreter exits."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def _dlit(x: float) -> str:
@@ -262,7 +272,7 @@ def q22_streaming_hourly(spark: SparkSession, sf: str) -> DataFrame:
     events = stream.read_event_stream(spark, sf, glob="events.parquet")
     counts = stream.windowed_counts(events, window="1 hour")
     sink = f"stream_out_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = _work_dir("ckpt_")
     stream.run_available_now(counts, checkpoint=ckpt, sink_table=sink, output_mode="complete")
     return spark.table(sink)
 
@@ -465,7 +475,7 @@ def q42_stateful_user_totals(spark: SparkSession, sf: str) -> DataFrame:
     events = stream.read_event_stream(spark, sf, glob="events.parquet")
     totals = user_totals_stateful(events)
     sink = f"stateful_out_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_state_")
+    ckpt = _work_dir("ckpt_state_")
     q = (
         totals.writeStream.outputMode("update")
         .format("memory")
@@ -1414,7 +1424,7 @@ def q92_merge_prune_partitioned(spark: SparkSession, sf: str) -> DataFrame:
     # per-call unique dir under TMPDIR: concurrent runs against the same
     # sf dir must not race on the overwrite + rmtree/rename swap (q108's
     # sink pattern)
-    root = tempfile.mkdtemp(prefix=f"sparkgraft_q92_{_os.path.basename(sf.rstrip('/'))}_")
+    root = _work_dir(f"sparkgraft_q92_{_os.path.basename(sf.rstrip('/'))}_")
     fact_path = f"{root}/lineitem_by_month"
     (
         li.where(F.col("l_orderkey") % 3 != 0)
@@ -1738,7 +1748,7 @@ def q104_streaming_corpus_ingest(spark: SparkSession, sf: str) -> DataFrame:
     batch q13 dedup regardless of batch boundaries or redelivery
     (streaming/pipeline.ingest_corpus_incrementally). The oracle is
     the plain batch GROUP BY, which is exactly the point."""
-    work = tempfile.mkdtemp(prefix=f"sparkgraft_q104_{os.path.basename(sf.rstrip('/'))}_")
+    work = _work_dir(f"sparkgraft_q104_{os.path.basename(sf.rstrip('/'))}_")
     return stream.ingest_corpus_incrementally(spark, sf, work, n_arrival_files=4)
 
 
@@ -1793,7 +1803,7 @@ def q108_stream_attribution(spark: SparkSession, sf: str) -> DataFrame:
     )
     pairs = joined.select(F.col("l.user_id").alias("user_id"), F.col("r.value").alias("value"))
     sink = f"stream_attr_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = _work_dir("ckpt_")
     stream.run_available_now(
         pairs, checkpoint=ckpt, sink_table=sink, output_mode="append", state_partitions=8
     )
@@ -1981,7 +1991,7 @@ def q114_incremental_rollup(spark: SparkSession, sf: str) -> DataFrame:
     redelivery, so idempotence comes from the ledger + atomic rename).
     Oracle = the plain batch GROUP BY over the whole feed — the
     maintained table must be indistinguishable from recomputation."""
-    work = tempfile.mkdtemp(prefix=f"sparkgraft_q114_{os.path.basename(sf.rstrip('/'))}_")
+    work = _work_dir(f"sparkgraft_q114_{os.path.basename(sf.rstrip('/'))}_")
     return stream.maintain_hourly_rollup(spark, sf, work, n_arrival_files=4).orderBy(
         "hour", "event_type"
     )
@@ -2221,7 +2231,7 @@ def q123_scd2_history(spark: SparkSession, sf: str) -> DataFrame:
     b2 = b1.join(prem, "c_custkey", "left_semi").withColumn(
         "segment", F.lit("PREMIUM")
     ).unionByName(b1.join(prem, "c_custkey", "left_anti"))
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix=f"scd2_{uuid.uuid4().hex[:8]}_"))
+    wh = Warehouse(spark, _work_dir("scd2_"))
     wh.scd2_merge("dim_customer", b1, key=["c_custkey"], attrs=["bal_bucket", "segment"], batch_ts=t1)
     wh.scd2_merge("dim_customer", b2, key=["c_custkey"], attrs=["bal_bucket", "segment"], batch_ts=t2)
     return wh.read("dim_customer").select(
@@ -2300,7 +2310,7 @@ def q126_streaming_sessions(spark: SparkSession, sf: str) -> DataFrame:
     events = stream.read_event_stream(spark, sf, glob="events.parquet")
     sess = stream.session_window_counts(events, key="user_id", gap="30 minutes")
     sink = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = _work_dir("ckpt_")
     stream.run_available_now(
         sess, checkpoint=ckpt, sink_table=sink, output_mode="complete", state_partitions=8
     )
@@ -2333,7 +2343,7 @@ def q127_point_in_time_join(spark: SparkSession, sf: str) -> DataFrame:
     b2 = b1.join(prem, "c_custkey", "left_semi").withColumn(
         "segment", F.lit("PREMIUM")
     ).unionByName(b1.join(prem, "c_custkey", "left_anti"))
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix=f"pit_{uuid.uuid4().hex[:8]}_"))
+    wh = Warehouse(spark, _work_dir("pit_"))
     wh.scd2_merge("dim", b1, key=["c_custkey"], attrs=["bal_bucket", "segment"], batch_ts=t1)
     wh.scd2_merge("dim", b2, key=["c_custkey"], attrs=["bal_bucket", "segment"], batch_ts=t2)
     dim = wh.read("dim")
@@ -2419,7 +2429,7 @@ def q130_streaming_dedup(spark: SparkSession, sf: str) -> DataFrame:
     doubled = ev1.unionByName(ev2).select("event_id", "ts", "event_type")
     deduped = stream.dedup_stream(doubled, ["event_id"])
     sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = _work_dir("ckpt_")
     stream.run_available_now(
         deduped, checkpoint=ckpt, sink_table=sink, output_mode="append", state_partitions=8
     )
@@ -2572,7 +2582,7 @@ def q135_bucketed_join(spark: SparkSession, sf: str) -> DataFrame:
     tests/test_skew_bucketing.py. Returns per-priority revenue."""
     from nyc_taxi_data_prediction_pyspark_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix=f"bkt_{uuid.uuid4().hex[:8]}_"))
+    wh = Warehouse(spark, _work_dir("bkt_"))
     o = load(spark, sf, "orders").select("o_orderkey", "o_orderpriority")
     li = load(spark, sf, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
     tag = uuid.uuid4().hex[:8]
@@ -3032,7 +3042,7 @@ def q150_snapshot_time_travel(spark: SparkSession, sf: str) -> DataFrame:
     from nyc_taxi_data_prediction_pyspark_spark.operators import ivm
     from nyc_taxi_data_prediction_pyspark_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix=f"snap_{uuid.uuid4().hex[:8]}_"))
+    wh = Warehouse(spark, _work_dir("snap_"))
     o = load(spark, sf, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -3199,7 +3209,7 @@ def q145_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     the capability it delegates to the warehouse."""
     from nyc_taxi_data_prediction_pyspark_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix=f"evo_{uuid.uuid4().hex[:8]}_"))
+    wh = Warehouse(spark, _work_dir("evo_"))
     o = load(spark, sf, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -3528,7 +3538,7 @@ def q165_stream_outer_attribution(spark: SparkSession, sf: str) -> DataFrame:
         F.col("l.user_id").alias("user_id"), F.col("r.value").alias("value")
     )
     sink = f"stream_oattr_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = _work_dir("ckpt_")
     stream.run_available_now(
         pairs, checkpoint=ckpt, sink_table=sink, output_mode="append", state_partitions=8
     )
@@ -4595,7 +4605,7 @@ def q200_streaming_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     (the q28 precedent), within-bucket lower-id pairs, per-bucket
     rollup — streaming arrival must land exactly on it."""
     pin_session(spark)
-    work = os.path.join(tempfile.gettempdir(), f"semstream_{uuid.uuid4().hex[:8]}")
+    work = _work_dir("semstream_")
     store = stream.ingest_embeddings_incrementally(
         spark, sf, work, n_arrival_files=4, threshold=0.93, n_planes=6, seed=42
     )
@@ -4977,7 +4987,7 @@ def q220_streaming_holt(spark: SparkSession, sf: str) -> DataFrame:
     fold is NOT idempotent. The state machine replays the exact batch
     IEEE-op sequence, so the final store is BIT-EQUAL to q212's batch
     operator — the oracle IS q212's recursive-CTE replay."""
-    work = tempfile.mkdtemp(prefix=f"sparkgraft_q220_{os.path.basename(sf.rstrip('/'))}_")
+    work = _work_dir(f"sparkgraft_q220_{os.path.basename(sf.rstrip('/'))}_")
     out = stream.holt_state_stream(spark, sf, work, alpha=0.5, beta=0.25)
     return out.orderBy("user_id").limit(25)
 
@@ -5431,7 +5441,7 @@ def q245_streaming_hll(spark: SparkSession, sf: str) -> DataFrame:
     batch fixpoint. The oracle is q147's batch HLL SQL (sketch side):
     a streaming-vs-batch parity check the driver value-hashes."""
     pin_session(spark)
-    work = os.path.join(tempfile.gettempdir(), f"hllstream_{uuid.uuid4().hex[:8]}")
+    work = _work_dir("hllstream_")
     return stream.hll_streaming_ingest(
         spark, sf, work, group_keys=("event_type",), value_col="user_id", p=9
     )
@@ -5481,7 +5491,7 @@ def q248_txn_refresh(spark: SparkSession, sf: str) -> DataFrame:
     v2 state directly; any torn fact/dim pairing hash-mismatches."""
     from nyc_taxi_data_prediction_pyspark_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix=f"txn_{uuid.uuid4().hex[:8]}_"))
+    wh = Warehouse(spark, _work_dir("txn_"))
     ev = load(spark, sf, "events")
     half = ev.where(F.col("event_id") % 2 == 0)
 
@@ -5827,7 +5837,7 @@ def q264_stream_funnel(spark: SparkSession, sf: str) -> DataFrame:
     The oracle is q251's batch SQL VERBATIM — the batch-fixpoint
     contract (q104/q200): any split/order/redelivery of arrivals must
     land on the identical value hash."""
-    work = tempfile.mkdtemp(prefix=f"sparkgraft_q264_{os.path.basename(sf.rstrip('/'))}_")
+    work = _work_dir(f"sparkgraft_q264_{os.path.basename(sf.rstrip('/'))}_")
     fun = stream.funnel_stream(
         spark,
         sf,
@@ -6099,7 +6109,7 @@ def q277_streaming_cdc_upsert(spark: SparkSession, sf: str) -> DataFrame:
     readout). The oracle is the BATCH latest-per-key apply — the
     q104/q200/q264 batch-fixpoint contract for a MUTABLE keyed
     table. Readout: per-status key count + dsum of applied totals."""
-    work = tempfile.mkdtemp(prefix=f"sparkgraft_q277_{os.path.basename(sf.rstrip('/'))}_")
+    work = _work_dir(f"sparkgraft_q277_{os.path.basename(sf.rstrip('/'))}_")
     applied = stream.cdc_upsert_stream(spark, sf, work, n_arrival_files=4)
     return (
         applied.groupBy(F.col("status").alias("o_orderstatus"))

@@ -26,6 +26,24 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def usable_memory_bytes() -> int:
+    """Memory this process may use: physical memory, or the cgroup v2
+    ``memory.max`` limit when one is set and smaller."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+    except OSError:
+        return total
+    return min(total, int(limit)) if limit.isdigit() else total
+
+
+def driver_memory(usable_bytes: int) -> str:
+    """Default driver heap: half of ``usable_bytes`` in whole GiB (at
+    least 1g), capped at 48g."""
+    return f"{max(1, min(48, usable_bytes // 2 // 2**30))}g"
+
+
 def get_spark(app_name: str = "nyc-taxi-pyspark-engine", *, cores: int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -45,8 +63,13 @@ def get_spark(app_name: str = "nyc-taxi-pyspark-engine", *, cores: int | None = 
         .config("spark.sql.parquet.filterPushdown", "true")
         # local mode = driver-only JVM: the heap IS the cluster memory.
         # 32 executor threads on a small heap GC-thrash under shuffle
-        # load; size generously on the 128 GiB test host.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # load, but a heap near the host's memory gets the JVM killed:
+        # half the usable memory, capped at 48g (SPARK_GRAFT_DRIVER_MEM
+        # overrides it per deployment).
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(usable_memory_bytes()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

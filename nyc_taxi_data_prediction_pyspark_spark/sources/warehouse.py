@@ -3,10 +3,10 @@ tables replacing the Snowflake stage/PUT/COPY/MERGE/TRUNCATE cycle
 (reference: dags/etl_spark_historical.py:251-339).
 
 Design: a plain directory-of-parquet "warehouse" with idempotent DDL
-(S10), staging-directory lifecycle (S11), atomic-enough swap writes,
-and the merge-upsert load (J1) from operators/merge.py. Without a
-transactional table format, atomicity is stage-directory + rename
-(single-writer), which the docstrings call out explicitly
+(S10), staging-directory lifecycle (S11), crash-safe swap writes
+(``swap_dir``), and the merge-upsert load (J1) from operators/merge.py.
+Without a transactional table format, atomicity is stage-directory +
+rename (single-writer), which the docstrings call out explicitly
 (SURVEY.md §7.4).
 """
 
@@ -21,6 +21,27 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .._schema_memo import read_parquet, remember
 from ..operators.merge import anti_new_rows
 from ..schemas import LOAD_TS_COL
+
+
+def swap_dir(target: str, staged: str) -> None:
+    """Replace directory ``target`` with the complete directory
+    ``staged``: rename the live copy ASIDE to ``target + '_old'``,
+    rename the staged copy in, then delete the old copy.  A plain
+    rmtree-then-rename has a window where a crash has deleted the only
+    copy; here a crash at any point leaves at least one complete copy
+    on disk (``target`` or ``target + '_old'``), so the failure is
+    recoverable by an operator rather than silent data loss.  This is
+    the engine's one directory swap (Warehouse table rewrites and the
+    streaming fold stores).  Single-writer discipline makes the fixed
+    ``_old`` name collision-free."""
+    old = target + "_old"
+    if os.path.exists(old):
+        shutil.rmtree(old)  # leftover from a prior completed swap
+    if os.path.exists(target):
+        os.rename(target, old)
+    os.rename(staged, target)
+    if os.path.exists(old):
+        shutil.rmtree(old)
 
 
 class Warehouse:
@@ -60,11 +81,15 @@ class Warehouse:
         old files are never touched; readers see the superset schema;
         the cost is one footer read per file (amortized by the usual
         footer caching), not a table rewrite. Default stays off
-        because single-schema tables shouldn't pay the footer merge."""
-        r = self.spark.read
+        because single-schema tables shouldn't pay the footer merge.
+
+        Without ``merge_schema`` the read goes through the schema memo:
+        a table last rewritten by this process (``_swap_write``) is read
+        with the schema it was written with, so no inference job runs;
+        an ``append`` changes the files, so the next read infers again."""
         if merge_schema:
-            r = r.option("mergeSchema", "true")
-        return r.parquet(self.path(table))
+            return self.spark.read.option("mergeSchema", "true").parquet(self.path(table))
+        return read_parquet(self.spark, self.path(table))
 
     # ---- snapshot versioning / time travel ------------------------------
     # The Delta/Iceberg capability the plain-parquet layout lacks most:
@@ -118,8 +143,7 @@ class Warehouse:
 
         A version written in this process is read with the schema it
         was written with, so the read launches no job; other versions
-        pay one schema-inference job on their first read (``read``, on
-        the mutable table directory, always infers)."""
+        pay one schema-inference job on their first read."""
         if version is None:
             with open(os.path.join(self.root, table, "_current")) as f:
                 version = int(f.read().strip())
@@ -367,7 +391,5 @@ class Warehouse:
     def _swap_write(self, table: str, df: DataFrame) -> None:
         tmp = self.path(f"_tmp_{table}_{uuid.uuid4().hex[:8]}")
         df.write.mode("overwrite").parquet(tmp)
-        final = self.path(table)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        swap_dir(self.path(table), tmp)
+        remember(self.spark, self.path(table), df.schema)

@@ -10,10 +10,29 @@ Spark-native mappings:
   ``catchup=False``.
 - T2: append-mode single-row feeds.
 - T3/T6: idempotence via watermark + dropDuplicates on the merge key,
-  or ``foreachBatch`` reusing the batch merge (exact J1 semantics) —
-  checkpoint + idempotent sink = effective exactly-once.
+  or ``foreachBatch`` folds into a persistent store (``fold_stream``) —
+  checkpoint + ledger-guarded store = effective exactly-once.
 - tumbling-window aggregation (F.window) — the hourly bucketing the
   declared trips⋈weather join needs.
+
+``fold_stream`` is the one driver of the seven store-folding ingests
+(q104, q114, q200, q220, q245, q264, q277). Each operator supplies its
+split arrivals, a per-batch ``fold(batch, prev_store_or_None)`` and its
+readout; the driver owns the rest:
+
+- trigger order: arrivals are written once, one part file per
+  partition, with mtimes stamped in part-name order, so triggers
+  deliver partitions in order (the file source lists by mtime);
+- ledger: ``_applied.json`` inside the store dir holds a watermark plus
+  straggler ids; an applied batch id is skipped, which makes the
+  additive folds (q114, q220) exactly-once and costs nothing for the
+  idempotent ones;
+- swap: each fold is written to a staged dir with its ledger and
+  published by ``sources.warehouse.swap_dir`` (rename-aside), so a
+  crash never splits data from ledger or leaves no complete copy;
+- schema memo: the store is read through ``_schema_memo.read_parquet``
+  and the written schema is remembered after each swap, so no store
+  read runs a schema-inference job.
 
 Local testing: parquet source dir + memory/parquet sink,
 ``availableNow`` + awaitTermination, per the public streaming docs.
@@ -21,10 +40,18 @@ Local testing: parquet source dir + memory/parquet sink,
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import time
+import uuid
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from .._schema_memo import read_parquet, remember
+from ..sources.warehouse import swap_dir
 
 # The driver's events parquet has shipped with BOTH TIMESTAMP(NANOS)
 # (read as long via spark.sql.legacy.parquet.nanosAsLong, ÷1000 to µs)
@@ -250,6 +277,81 @@ def foreach_batch_merge(
     q.awaitTermination()
 
 
+# the applied-batch ledger rides INSIDE the store's parquet dir: the
+# `_` prefix hides it from Spark's file listing, and the swap's single
+# directory rename publishes it together with the data
+LEDGER = "_applied.json"
+
+Fold = Callable[[DataFrame, DataFrame | None], DataFrame]
+
+
+def read_ledger(store: str) -> tuple[int, set]:
+    """The store's applied-batch ledger: (watermark, straggler ids).
+    Every batch id <= watermark has been applied, and so has each
+    straggler above it. (-1, set()) before the first batch."""
+    path = os.path.join(store, LEDGER)
+    if not os.path.exists(path):
+        return -1, set()
+    with open(path) as f:
+        led = json.load(f)
+    return int(led["watermark"]), set(led["stragglers"])
+
+
+def fold_batch(store: str, fold: Fold, batch: DataFrame, batch_id: int) -> None:
+    """One micro-batch of ``fold_stream``: skip the batch if the ledger
+    has it, else write ``fold(batch, previous store or None)`` with the
+    updated ledger to a staged dir and swap it in.
+
+    The ledger is compacted: after each fold the contiguous prefix of
+    applied ids folds into the watermark, so in-order delivery keeps it
+    one integer (an O(1) driver file read per batch, never a Spark job),
+    and out-of-order replay leaves stragglers until the gap closes."""
+    wm, ids = read_ledger(store)
+    if batch_id <= wm or batch_id in ids:
+        return  # redelivered batch: already folded in
+    spark = batch.sparkSession
+    prev = read_parquet(spark, store) if os.path.exists(store) else None
+    new = fold(batch, prev)
+    ids.add(batch_id)
+    while wm + 1 in ids:
+        wm += 1
+        ids.discard(wm)
+    tmp = f"{store}_tmp_{uuid.uuid4().hex[:8]}"
+    new.write.mode("overwrite").parquet(tmp)
+    with open(os.path.join(tmp, LEDGER), "w") as f:
+        json.dump({"watermark": wm, "stragglers": sorted(ids)}, f)
+    swap_dir(store, tmp)
+    remember(spark, store, new.schema)
+
+
+def fold_stream(arrivals: DataFrame, work_dir: str, fold: Fold) -> DataFrame:
+    """Stream ``arrivals`` one part file per trigger through ``fold``
+    into a store under ``work_dir``; return the final store.
+
+    ``arrivals`` comes already split: its partitions become the part
+    files, and their mtimes are stamped in part-name order so the file
+    source triggers them in partition order (it lists by mtime, and a
+    parallel write finishes files in any order).  ``work_dir`` is reset
+    first, so re-runs are deterministic."""
+    if os.path.exists(work_dir):
+        shutil.rmtree(work_dir)
+    src = os.path.join(work_dir, "arrivals")
+    store = os.path.join(work_dir, "store")
+    arrivals.write.mode("overwrite").parquet(src)
+    base = time.time() - 3600
+    parts = sorted(f for f in os.listdir(src) if not f.startswith(("_", ".")))
+    for i, name in enumerate(parts):
+        os.utime(os.path.join(src, name), (base + i, base + i))
+    spark = arrivals.sparkSession
+    stream = spark.readStream.schema(arrivals.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    foreach_batch_merge(
+        stream,
+        checkpoint=os.path.join(work_dir, "ckpt"),
+        merge_fn=lambda batch, batch_id: fold_batch(store, fold, batch, batch_id),
+    )
+    return read_parquet(spark, store)
+
+
 def ingest_corpus_incrementally(
     spark: SparkSession,
     sf_dir: str,
@@ -270,167 +372,49 @@ def ingest_corpus_incrementally(
     Per-batch cost is O(|store| + |batch|) — the store re-aggregates
     each trigger, fine for a compaction-style cadence; a per-key state
     store (applyInPandasWithState, the q42 pattern) is the low-latency
-    alternative when triggers are seconds apart. Store writes are
-    stage-and-rename swaps (single-writer, same caveat as Warehouse).
+    alternative when triggers are seconds apart.
     """
-    import os
-    import shutil
-    import uuid
-
     from ..catalog import load
     from ..operators.text import fingerprint
 
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)  # deterministic re-runs
-    arrivals = os.path.join(work_dir, "arrivals")
-    store = os.path.join(work_dir, "store")
-    ckpt = os.path.join(work_dir, "ckpt")
+    def fold(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        upd = fingerprint(batch).groupBy("doc_fp").agg(F.min("doc_id").alias("keep_id"))
+        if prev is None:
+            return upd
+        return prev.unionByName(upd).groupBy("doc_fp").agg(F.min("keep_id").alias("keep_id"))
 
     docs = load(spark, sf_dir, "documents")
-    docs.repartition(n_arrival_files).write.mode("overwrite").parquet(arrivals)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-    )
-
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        upd = fingerprint(batch).groupBy("doc_fp").agg(F.min("doc_id").alias("keep_id"))
-        if os.path.exists(store):
-            prev = batch.sparkSession.read.parquet(store)
-            merged = (
-                prev.unionByName(upd).groupBy("doc_fp").agg(F.min("keep_id").alias("keep_id"))
-            )
-        else:
-            merged = upd
-        tmp = f"{store}_tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        _swap_store(store, tmp)
-
-    foreach_batch_merge(stream, checkpoint=ckpt, merge_fn=merge)
-    return spark.read.parquet(store)
+    return fold_stream(docs.repartition(n_arrival_files), work_dir, fold)
 
 
-def _swap_store(store: str, tmp: str) -> None:
-    """Crash-safe store swap: rename the live store ASIDE before
-    renaming the staged copy in, then delete the old copy.  A plain
-    rmtree-then-rename has a window where a crash deletes the only
-    copy while the stream checkpoint has already committed the folded
-    batch_ids (they are never redelivered) — the data would be
-    silently, permanently lost.  With rename-aside, a crash at any
-    point leaves at least one complete copy on disk (``store`` or
-    ``store + '_old'``), so the failure is recoverable-by-operator
-    rather than silent.  Single-writer discipline (same caveat as
-    Warehouse) makes the fixed ``_old`` name collision-free."""
-    import os
-    import shutil
+def rollup_fold(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """The per-batch fold of ``maintain_hourly_rollup``: the batch's
+    partial (hour, event_type) aggregate, re-aggregated with the
+    previous store.
 
-    old = store + "_old"
-    if os.path.exists(old):
-        shutil.rmtree(old)  # leftover from a prior completed swap
-    if os.path.exists(store):
-        os.rename(store, old)
-    os.rename(tmp, store)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
-def rollup_merge_fn(store: str) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch merge for ``maintain_hourly_rollup``, exposed
-    so tests can replay a batch_id directly and assert the ledger makes
-    the additive merge idempotent. Batches carry the raw events schema
-    (ts as nano-long).
-
-    The applied-batch ledger is kept COMPACTED and DRIVER-SIDE: a tiny
-    JSON file holding a watermark (every batch_id <= it has been
-    applied) plus any straggler ids above it — the same shape as
-    Structured Streaming's own checkpoint commit log. Batch ids arrive
-    in order, so after every merge the contiguous prefix folds into the
-    watermark and the steady-state ledger is one integer; the per-batch
-    ledger read is an O(1) driver file read (no Spark job, no
-    unbounded ``collect()``) over an unbounded stream lifetime.
-    Out-of-order replay (test harnesses) leaves stragglers, which fold
-    in as soon as the gap closes. The ledger rides inside the store's
-    rename-aside swap (``_swap_store``), so a crash cannot split data
-    from ledger, and at least one complete (data, ledger) copy always
-    survives on disk.
-
-    The merge shuffle is sized to the OUTPUT domain: the rollup is
-    bounded by (hour, event_type) — metadata-sized by design — and the
+    The merged frame is coalesced to 4 tasks: the rollup is bounded by
+    the (hour, event_type) domain — metadata-sized by design — and the
     batch partial aggregate map-side-combines down to that domain per
     task before the exchange, so a handful of reducers is the right
     number at any input scale (AQE, which would pick this, is disabled
-    inside foreachBatch). The previous conf is restored after the
-    merge so direct (non-stream) callers see no leaked setting.
-    """
-    import json
-    import os
-    import shutil
-    import uuid
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        data_dir = os.path.join(store, "data")
-        wm, ids = read_rollup_ledger(store)
-        if batch_id <= wm or batch_id in ids:
-            return  # redelivered batch — already folded in
-        conf_key = "spark.sql.shuffle.partitions"
-        old_parts = s.conf.get(conf_key)
-        s.conf.set(conf_key, "4")
-        try:
-            # arrivals are written pre-normalized (TimestampType µs);
-            # test harnesses may replay raw nanos-long batches
-            b = batch
-            if dict(b.dtypes).get("ts") == "bigint":
-                b = b.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            partial = b.groupBy(
-                F.date_trunc("hour", F.col("ts")).alias("hour"), F.col("event_type")
-            ).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(18,4)")).alias("value_sum"),
-            )
-            if os.path.exists(data_dir):
-                prev = s.read.parquet(data_dir)
-                merged = (
-                    prev.unionByName(partial)
-                    .groupBy("hour", "event_type")
-                    .agg(
-                        F.sum("n").alias("n"),
-                        F.sum("value_sum").cast("decimal(18,4)").alias("value_sum"),
-                    )
-                )
-            else:
-                merged = partial
-            # fold the new id, then compact the contiguous prefix into
-            # the watermark; steady state (in-order delivery) is wm only
-            ids.add(batch_id)
-            while wm + 1 in ids:
-                wm += 1
-                ids.discard(wm)
-            tmp = f"{store}_tmp_{uuid.uuid4().hex[:8]}"
-            merged.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
-            with open(os.path.join(tmp, "ledger.json"), "w") as f:
-                json.dump({"watermark": wm, "stragglers": sorted(ids)}, f)
-            _swap_store(store, tmp)
-        finally:
-            s.conf.set(conf_key, old_parts)
-
-    return merge
-
-
-def read_rollup_ledger(store: str) -> tuple[int, set]:
-    """Read the compacted applied-batch ledger: (watermark, straggler
-    ids). watermark=-1 and no stragglers when the store is empty."""
-    import json
-    import os
-
-    path = os.path.join(store, "ledger.json")
-    if not os.path.exists(path):
-        return -1, set()
-    with open(path) as f:
-        led = json.load(f)
-    return int(led["watermark"]), set(led["stragglers"])
+    inside foreachBatch)."""
+    partial = batch.groupBy(
+        F.date_trunc("hour", F.col("ts")).alias("hour"), F.col("event_type")
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("value").cast("decimal(18,4)")).alias("value_sum"),
+    )
+    if prev is None:
+        return partial.coalesce(4)
+    return (
+        prev.unionByName(partial)
+        .groupBy("hour", "event_type")
+        .agg(
+            F.sum("n").alias("n"),
+            F.sum("value_sum").cast("decimal(18,4)").alias("value_sum"),
+        )
+        .coalesce(4)
+    )
 
 
 def maintain_hourly_rollup(
@@ -449,12 +433,11 @@ def maintain_hourly_rollup(
     SUM/COUNT are additive — a batch contributes its PARTIAL aggregate
     and the store re-aggregates — but additive merges are NOT
     idempotent under foreachBatch's at-least-once redelivery (unlike
-    q104's MIN-merge). Idempotence is restored the warehouse way: a
-    ledger of applied batch_ids rides inside the store directory and
-    the swap is a single atomic rename, so a redelivered batch is
-    recognized and skipped, and a crash between data and ledger writes
-    cannot split them. The maintained table is IDENTICAL to the batch
-    group-by however arrivals are split or redelivered
+    q104's MIN-merge). Idempotence comes from the driver's applied-batch
+    ledger, published with the data by the store swap's one rename: a
+    redelivered batch is recognized and skipped, and a crash cannot
+    split data from ledger. The maintained table is IDENTICAL to the
+    batch group-by however arrivals are split or redelivered
     (batch-boundary invariance + redelivery invariance, both tested).
 
     Per-trigger cost is O(|store| + |batch|) — the rollup is bounded
@@ -463,39 +446,18 @@ def maintain_hourly_rollup(
     in the store (order-independent, exactly mergeable) and cast to
     double only at the read boundary.
     """
-    import os
-    import shutil
-    import uuid
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)  # deterministic re-runs
-    arrivals = os.path.join(work_dir, "arrivals")
-    store = os.path.join(work_dir, "store")
-    ckpt = os.path.join(work_dir, "ckpt")
-
     # arrivals are written NORMALIZED (TimestampType µs, whatever the
-    # source file's physical unit) so the per-batch merge never
+    # source file's physical unit) so the per-batch fold never
     # re-converts — catalog.load handles ns-vs-µs detection.
     from ..catalog import load
 
     raw = load(spark, sf_dir, "events")
-    raw.repartition(n_arrival_files).write.mode("overwrite").parquet(arrivals)
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA_TS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-    )
-
-    foreach_batch_merge(stream, checkpoint=ckpt, merge_fn=rollup_merge_fn(store))
-    return (
-        spark.read.parquet(os.path.join(store, "data"))
-        .select(
-            "hour",
-            "event_type",
-            "n",
-            F.col("value_sum").cast("double").alias("value_sum"),
-        )
+    store = fold_stream(raw.repartition(n_arrival_files), work_dir, rollup_fold)
+    return store.select(
+        "hour",
+        "event_type",
+        "n",
+        F.col("value_sum").cast("double").alias("value_sum"),
     )
 
 
@@ -531,33 +493,15 @@ def ingest_embeddings_incrementally(
     ``ingest_corpus_incrementally``; per-key state
     (applyInPandasWithState) is the low-latency alternative. Returns
     the final store (pid, bucket, dropped)."""
-    import os
-    import shutil
-    import uuid
-
     from ..catalog import load
     from ..functions.vectors import as_double, cosine
     from ..operators.similarity import lsh_buckets, random_hyperplanes
 
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)  # deterministic re-runs
-    arrivals = os.path.join(work_dir, "arrivals")
-    store = os.path.join(work_dir, "store")
-    ckpt = os.path.join(work_dir, "ckpt")
-
     emb = load(spark, sf_dir, "embeddings")
     dim = len(emb.select("embedding").first()["embedding"])
     planes = random_hyperplanes(dim, n_planes, seed)
-    emb.repartition(n_arrival_files).write.mode("overwrite").parquet(arrivals)
 
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-    )
-
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        ss = batch.sparkSession
+    def fold(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         b = (
             lsh_buckets(batch, planes)
             .select(
@@ -566,10 +510,8 @@ def ingest_embeddings_incrementally(
                 as_double("embedding").alias("vec"),
             )
         )
-        if os.path.exists(store):
-            prev = ss.read.parquet(store)
-        else:
-            prev = ss.createDataFrame(
+        if prev is None:
+            prev = batch.sparkSession.createDataFrame(
                 [], "pid long, bucket long, vec array<double>, dropped boolean"
             )
         allv = prev.unionByName(b.withColumn("dropped", F.lit(False)))
@@ -608,7 +550,7 @@ def ingest_embeddings_incrementally(
             .select(F.col("id_l2").alias("pid"))
         )
         victims = hit_batch.union(hit_store).distinct().withColumn("__hit", F.lit(True))
-        merged = (
+        return (
             allv.join(victims, "pid", "left")
             .select(
                 "pid",
@@ -617,12 +559,9 @@ def ingest_embeddings_incrementally(
                 (F.col("dropped") | F.coalesce("__hit", F.lit(False))).alias("dropped"),
             )
         )
-        tmp = f"{store}_tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        _swap_store(store, tmp)
 
-    foreach_batch_merge(stream, checkpoint=ckpt, merge_fn=merge)
-    return spark.read.parquet(store).select("pid", "bucket", "dropped")
+    arrivals = emb.repartition(n_arrival_files)
+    return fold_stream(arrivals, work_dir, fold).select("pid", "bucket", "dropped")
 
 
 def holt_state_stream(
@@ -649,24 +588,16 @@ def holt_state_stream(
     composing per-batch affine maps is mathematically equal but
     rounds differently, so the element-wise replay is the one that
     value-hashes). Arrivals are split by ``repartitionByRange`` on
-    (ts, event_id), and file-source triggers list part files in
-    order, so cross-batch event-time order per user holds by
-    construction.
+    (ts, event_id): range partition ids are event-time-ordered, and
+    ``fold_stream`` triggers part files in partition order, so
+    cross-batch event-time order per user holds by construction with
+    one write and one scan.
 
     Delivery: Holt is NOT idempotent (a re-applied batch double-
-    advances the fold), so unlike q104's MIN-merge this sink keeps a
-    driver-side applied-batch watermark INSIDE the store swap (the
-    rollup_merge_fn ledger discipline, collapsed to one integer
-    because file-source batch ids are sequential): a redelivered
-    batch_id <= watermark is a no-op. The watermark file is staged
-    INTO the tmp store directory before ``_swap_store`` — the single
-    directory rename publishes data and watermark atomically, so a
-    crash at any instant leaves (store, watermark) consistent and the
-    checkpoint's redelivery is correctly skipped. (A separate
-    post-swap ledger rename would leave a window where the store is
-    advanced but the watermark is stale — redelivery would then
-    double-apply the fold.) Crash-safe via the same rename-aside
-    ``_swap_store``.
+    advances the fold), so unlike q104's MIN-merge this sink relies on
+    the driver's applied-batch ledger, published with the data by the
+    store swap's one rename: a redelivered batch is skipped, and no
+    crash ordering can advance the store without the ledger.
 
     Per-batch cost is O(|store| + |batch|) (store re-write per
     trigger, the q104 compaction-cadence contract); per-key state is
@@ -674,64 +605,11 @@ def holt_state_stream(
     applyInPandasWithState low-latency variant (q42) swaps in behind
     the same state machine when triggers are seconds apart.
     """
-    import json
-    import os
-    import shutil
-    import uuid
-
     from ..catalog import load
 
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)  # deterministic re-runs
-    arrivals = os.path.join(work_dir, "arrivals")
-    store = os.path.join(work_dir, "store")
-    ckpt = os.path.join(work_dir, "ckpt")
     a, bt = float(alpha), float(beta)
 
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
-    # FileStreamSource orders files by MODIFICATION TIME, not name, so
-    # a range-partitioned parallel write alone gives no cross-batch
-    # order guarantee (measured: batches arrive shuffled). But range
-    # partition ids ARE event-time-ordered and part-file NAMES carry
-    # the partition id, so ONE repartitionByRange write + an mtime
-    # fixup in filename order reconstructs trigger order == event-time
-    # order — replacing the round-9 form's percentile-cut collect plus
-    # one full events scan PER slice (round-13: 5 jobs/4 scans → 1
-    # job/1 scan; the final store is split-invariant by the
-    # element-wise-replay contract, test-pinned).
-    ev.repartitionByRange(n_arrival_files, F.col("ts").asc(), F.col("event_id").asc()).write.mode(
-        "overwrite"
-    ).parquet(arrivals)
-    import time as _time
-
-    base_mtime = _time.time() - 3600
-    parts = sorted(
-        f for f in os.listdir(arrivals) if not f.startswith(("_", "."))
-    )
-    for i, fname in enumerate(parts):
-        os.utime(os.path.join(arrivals, fname), (base_mtime + i, base_mtime + i))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-    )
-
-    # watermark lives INSIDE the store dir (underscore prefix: Spark's
-    # file listing skips `_`/`.` names, so it is invisible to the
-    # parquet reader) — published by the same rename that publishes the
-    # data, never by a second post-swap rename
-    _LEDGER = "_applied.json"
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        watermark = -1
-        ledger = os.path.join(store, _LEDGER)
-        if os.path.exists(ledger):
-            with open(ledger) as fh:
-                watermark = json.load(fh)["watermark"]
-        if batch_id <= watermark:
-            return  # redelivered batch: the fold is not idempotent, skip
-        sess = batch.sparkSession
+    def fold(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         packed = batch.groupBy("user_id").agg(
             F.sort_array(
                 F.collect_list(
@@ -743,10 +621,8 @@ def holt_state_stream(
                 )
             ).alias("__arr")
         )
-        if os.path.exists(store):
-            prev = sess.read.parquet(store)
-        else:
-            prev = sess.createDataFrame(
+        if prev is None:
+            prev = batch.sparkSession.createDataFrame(
                 [], "user_id long, n_events long, l double, b double"
             )
         joined = packed.join(prev, "user_id", "left").select(
@@ -785,19 +661,11 @@ def holt_state_stream(
             F.col("__s.b").alias("b"),
         )
         untouched = prev.join(packed.select("user_id"), "user_id", "left_anti")
-        merged = untouched.unionByName(upd)
-        tmp = f"{store}_tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        # stage the watermark into the tmp store BEFORE the swap: the
-        # one directory rename is the commit point for data+watermark
-        # together, so no crash ordering can advance one without the
-        # other
-        with open(os.path.join(tmp, _LEDGER), "w") as fh:
-            json.dump({"watermark": batch_id}, fh)
-        _swap_store(store, tmp)
+        return untouched.unionByName(upd)
 
-    foreach_batch_merge(stream, checkpoint=ckpt, merge_fn=merge)
-    out = spark.read.parquet(store)
+    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
+    arrivals = ev.repartitionByRange(n_arrival_files, F.col("ts").asc(), F.col("event_id").asc())
+    out = fold_stream(arrivals, work_dir, fold)
     return out.select(
         "user_id",
         "n_events",
@@ -840,43 +708,20 @@ def hll_streaming_ingest(
     INDEPENDENT of stream length — the bounded-state contract).
     Returns the final per-group estimate frame (n_used, d_scaled,
     hll_estimate)."""
-    import os
-    import shutil
-    import uuid
-
     from ..catalog import load
     from ..operators.aggregates import hll_from_registers, hll_registers
 
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)  # deterministic re-runs
-    arrivals = os.path.join(work_dir, "arrivals")
-    store = os.path.join(work_dir, "store")
-    ckpt = os.path.join(work_dir, "ckpt")
-
     gk = list(group_keys)
+
+    def fold(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        regs = hll_registers(batch, group_keys=gk, value_col=value_col, p=p)
+        if prev is not None:
+            regs = prev.unionByName(regs)
+        return regs.groupBy(*gk, "__bkt").agg(F.max("__r").alias("__r"))
+
     ev = load(spark, sf_dir, "events").select(*gk, value_col)
-    ev.repartition(n_arrival_files).write.mode("overwrite").parquet(arrivals)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-    )
-
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        ss = batch.sparkSession
-        regs_b = hll_registers(batch, group_keys=gk, value_col=value_col, p=p)
-        if os.path.exists(store):
-            regs_b = ss.read.parquet(store).unionByName(regs_b)
-        merged = regs_b.groupBy(*gk, "__bkt").agg(F.max("__r").alias("__r"))
-        tmp = f"{store}_tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        _swap_store(store, tmp)
-
-    foreach_batch_merge(stream, checkpoint=ckpt, merge_fn=merge)
-    return hll_from_registers(
-        spark.read.parquet(store), group_keys=gk, p=p
-    ).orderBy(*gk)
+    store = fold_stream(ev.repartition(n_arrival_files), work_dir, fold)
+    return hll_from_registers(store, group_keys=gk, p=p).orderBy(*gk)
 
 
 def funnel_stream(
@@ -914,25 +759,12 @@ def funnel_stream(
     State is bounded by per-user activity inside the anchor horizon
     (plus any not-yet-anchored candidates — a production deployment
     would watermark those out; kept here for exact batch equality).
-    One store directory, one atomic swap per batch (_swap_store).
+    One store directory, one crash-safe swap per batch (``fold_stream``).
 
     Returns the per-user funnel frame (user_id, t0..t{k-1}) computed
     from the final store through the SAME batch operator."""
-    import os
-    import shutil
-    import uuid
-
     from ..catalog import load
     from ..operators.windows import ordered_funnel
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)  # deterministic re-runs
-    arrivals = os.path.join(work_dir, "arrivals")
-    store = os.path.join(work_dir, "store")
-    ckpt = os.path.join(work_dir, "ckpt")
-
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    ev.repartition(n_arrival_files).write.mode("overwrite").parquet(arrivals)
 
     step_of = {s: k for k, s in enumerate(steps)}
     kind_expr = F.coalesce(
@@ -942,29 +774,18 @@ def funnel_stream(
         ]
     )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-    )
-
-    def merge(batch: DataFrame, _batch_id: int) -> None:
+    def fold(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         rows = (
             batch.withColumn("kind", kind_expr)
             .where(F.col("kind").isNotNull())
             .select("user_id", "kind", F.unix_micros("ts").alias("t"))
         )
-        if os.path.exists(store):
-            prev = batch.sparkSession.read.parquet(store)
+        if prev is not None:
             rows = prev.unionByName(rows)
-        folded = funnel_state_fold(rows, horizon_us=horizon_us)
-        tmp = f"{store}_tmp_{uuid.uuid4().hex[:8]}"
-        folded.write.mode("overwrite").parquet(tmp)
-        _swap_store(store, tmp)
+        return funnel_state_fold(rows, horizon_us=horizon_us)
 
-    foreach_batch_merge(stream, checkpoint=ckpt, merge_fn=merge)
-
-    final = spark.read.parquet(store)
+    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_type")
+    final = fold_stream(ev.repartition(n_arrival_files), work_dir, fold)
     replay = final.select(
         "user_id",
         F.timestamp_micros(F.col("t")).alias("ts"),
@@ -1046,7 +867,7 @@ def cdc_upsert_stream(
     on (version, ...) — versions are unique per key, so the fold is
     idempotent AND commutative: redelivery is a no-op, a stale UPDATE
     arriving after the DELETE loses to it, and any batch split
-    converges to the same store.  One atomic _swap_store per batch.
+    converges to the same store.  One crash-safe swap per batch.
     DELETE rows stay in the store as TOMBSTONES (so a late lower
     version can never resurrect the key) and are dropped only at
     readout — the standard compaction-deferred CDC design.
@@ -1055,17 +876,7 @@ def cdc_upsert_stream(
     agg over O(|store| + |batch|); state = one row per live key + one
     per tombstone.  Returns the applied table (key, version, op,
     status, totalprice), tombstones filtered."""
-    import os
-    import shutil
-    import uuid
-
     from ..catalog import load
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)  # deterministic re-runs
-    arrivals = os.path.join(work_dir, "arrivals")
-    store = os.path.join(work_dir, "store")
-    ckpt = os.path.join(work_dir, "ckpt")
 
     o = load(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("key"),
@@ -1087,41 +898,28 @@ def cdc_upsert_stream(
     )
     changes = v1.unionByName(v2).unionByName(v3)
     redelivered = changes.unionByName(changes)  # at-least-once duplicates
-    (
-        redelivered.repartition(
-            n_arrival_files, F.col("key") * 31 + F.col("version") * 17
-        )
-        .write.mode("overwrite")
-        .parquet(arrivals)
+    arrivals = redelivered.repartition(
+        n_arrival_files, F.col("key") * 31 + F.col("version") * 17
     )
+    return fold_stream(arrivals, work_dir, cdc_fold).where(F.col("op") != "D")
 
-    stream = (
-        spark.readStream.schema(redelivered.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-    )
 
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        rows = batch
-        if os.path.exists(store):
-            rows = batch.sparkSession.read.parquet(store).unionByName(rows)
-        latest = (
-            rows.groupBy("key")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("version").alias("version"),
-                        F.col("op").alias("op"),
-                        F.col("status").alias("status"),
-                        F.col("totalprice").alias("totalprice"),
-                    )
-                ).alias("__m")
-            )
-            .select("key", "__m.version", "__m.op", "__m.status", "__m.totalprice")
+def cdc_fold(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """The per-batch fold of ``cdc_upsert_stream``: per key, the
+    struct-MAX on (version, op, status, totalprice) over the previous
+    store and the batch change rows."""
+    rows = batch if prev is None else prev.unionByName(batch)
+    return (
+        rows.groupBy("key")
+        .agg(
+            F.max(
+                F.struct(
+                    F.col("version").alias("version"),
+                    F.col("op").alias("op"),
+                    F.col("status").alias("status"),
+                    F.col("totalprice").alias("totalprice"),
+                )
+            ).alias("__m")
         )
-        tmp = f"{store}_tmp_{uuid.uuid4().hex[:8]}"
-        latest.write.mode("overwrite").parquet(tmp)
-        _swap_store(store, tmp)
-
-    foreach_batch_merge(stream, checkpoint=ckpt, merge_fn=merge)
-    return spark.read.parquet(store).where(F.col("op") != "D")
+        .select("key", "__m.version", "__m.op", "__m.status", "__m.totalprice")
+    )

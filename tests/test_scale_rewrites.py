@@ -6,6 +6,7 @@ scale, never different answers."""
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import os
 import random
 
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_prediction_pyspark_spark import catalog
 from nyc_taxi_data_prediction_pyspark_spark.operators import joins, topk, windows
+from nyc_taxi_data_prediction_pyspark_spark.sources.warehouse import Warehouse
 from nyc_taxi_data_prediction_pyspark_spark.streaming import pipeline as stream
 
 
@@ -252,19 +254,42 @@ def test_rollup_batch_split_invariance(spark, sf_dir, tmp_path):
     assert _rows_set(one) == _rows_set(batch)
 
 
-def test_rollup_ledger_makes_redelivery_idempotent(spark, sf_dir, tmp_path):
+def _cdc_changes(spark, sf_dir, version):
+    return catalog.load(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("key"),
+        F.lit(version).alias("version"),
+        F.lit("IU"[version - 1]).alias("op"),
+        F.col("o_orderstatus").alias("status"),
+        (F.col("o_totalprice") + F.lit(version - 1.0)).alias("totalprice"),
+    )
+
+
+@pytest.mark.parametrize("fold", ["rollup", "cdc"])
+def test_rollup_ledger_makes_redelivery_idempotent(spark, sf_dir, tmp_path, fold):
+    """Every fold store skips a batch id its ledger holds: required for
+    the additive rollup, and pinned for the idempotent CDC fold by the
+    store not being rewritten."""
     store = str(tmp_path / "store")
-    merge = stream.rollup_merge_fn(store)
-    batch = catalog.load(spark, sf_dir, "events")
-    merge(batch, 0)
-    once = _rows_set(spark.read.parquet(os.path.join(store, "data")))
-    merge(batch, 0)  # at-least-once redelivery of the SAME batch id
-    assert _rows_set(spark.read.parquet(os.path.join(store, "data"))) == once
-    merge(batch, 1)  # a genuinely new batch still folds in
-    doubled = spark.read.parquet(os.path.join(store, "data"))
-    assert _rows_set(doubled.select("hour", "event_type", (F.col("n") / 2).cast("bigint").alias("n"))) == {
-        (h, t, n) for h, t, n, _ in once
-    }
+    if fold == "rollup":
+        fold_fn, batch = stream.rollup_fold, catalog.load(spark, sf_dir, "events")
+        new = batch
+    else:
+        fold_fn, batch, new = stream.cdc_fold, _cdc_changes(spark, sf_dir, 1), _cdc_changes(spark, sf_dir, 2)
+    stream.fold_batch(store, fold_fn, batch, 0)
+    once = _rows_set(spark.read.parquet(store))
+    files = sorted(os.listdir(store))  # a rewrite writes new part-file names
+    stream.fold_batch(store, fold_fn, batch, 0)  # at-least-once redelivery of the SAME batch id
+    assert _rows_set(spark.read.parquet(store)) == once
+    assert sorted(os.listdir(store)) == files
+    stream.fold_batch(store, fold_fn, new, 1)  # a genuinely new batch still folds in
+    after = spark.read.parquet(store)
+    if fold == "rollup":
+        assert _rows_set(after.select("hour", "event_type", (F.col("n") / 2).cast("bigint").alias("n"))) == {
+            (h, t, n) for h, t, n, _ in once
+        }
+    else:
+        assert _rows_set(after) == {(k, 2, "U", s, p + 1.0) for k, _, _, s, p in once}
+    assert stream.read_ledger(store) == (1, set())
 
 
 def test_rollup_ledger_compacts_to_watermark(spark, sf_dir, tmp_path):
@@ -273,25 +298,25 @@ def test_rollup_ledger_compacts_to_watermark(spark, sf_dir, tmp_path):
     boundary is still recognized, and out-of-order gaps hold stragglers
     until the gap closes."""
     store = str(tmp_path / "store")
-    merge = stream.rollup_merge_fn(store)
     batch = catalog.load(spark, sf_dir, "events")
+    merge = functools.partial(stream.fold_batch, store, stream.rollup_fold)
 
     for bid in (0, 1, 2):
         merge(batch, bid)
-    assert stream.read_rollup_ledger(store) == (2, set())
+    assert stream.read_ledger(store) == (2, set())
 
-    once = _rows_set(spark.read.parquet(os.path.join(store, "data")))
+    once = _rows_set(spark.read.parquet(store))
     for bid in (0, 1, 2):  # redelivery AFTER compaction erased the ids
         merge(batch, bid)
-    assert _rows_set(spark.read.parquet(os.path.join(store, "data"))) == once
-    assert stream.read_rollup_ledger(store) == (2, set())
+    assert _rows_set(spark.read.parquet(store)) == once
+    assert stream.read_ledger(store) == (2, set())
 
     merge(batch, 4)  # gap: 3 missing -> 4 is a straggler, wm stays 2
-    assert stream.read_rollup_ledger(store) == (2, {4})
+    assert stream.read_ledger(store) == (2, {4})
     merge(batch, 4)  # straggler redelivery is also recognized
-    assert stream.read_rollup_ledger(store) == (2, {4})
+    assert stream.read_ledger(store) == (2, {4})
     merge(batch, 3)  # gap closes -> everything folds into the watermark
-    assert stream.read_rollup_ledger(store) == (4, set())
+    assert stream.read_ledger(store) == (4, set())
 
 
 def test_throttle_matches_python_fold(spark):
@@ -456,33 +481,52 @@ def test_q140_short_history_clamps(spark, tmp_path):
     assert row[2] == "1.000000,2.000000,3.000000"
 
 
-def test_swap_store_always_leaves_a_complete_copy(spark, tmp_path):
-    """The store swap must never have a window where no complete copy
-    exists on disk: rename-aside, not rmtree-then-rename.  Simulated
-    crash after the aside-rename still leaves the old copy
-    recoverable at store_old."""
-    import json
+@pytest.mark.parametrize("target", ["store", "warehouse"])
+def test_swap_store_always_leaves_a_complete_copy(spark, tmp_path, monkeypatch, target):
+    """The directory swap must never have a window where no complete
+    copy exists on disk: rename-aside, not rmtree-then-rename.  A crash
+    after the aside-rename (the swap-in rename fails) still leaves the
+    old copy recoverable at target_old.  Both callers share the swap:
+    the streaming fold store and ``Warehouse._swap_write``."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    path = str(tmp_path / "store") if target == "store" else wh.path("t")
 
-    store = str(tmp_path / "store")
-    merge = stream.rollup_merge_fn(store)
+    def write(df, batch_id):
+        if target == "store":
+            stream.fold_batch(path, stream.rollup_fold, df, batch_id)
+        else:
+            wh._swap_write("t", df)
+
     batch = spark.createDataFrame(
         [(dt.datetime(2026, 1, 1, h), "click", 1.0) for h in range(3)],
         "ts timestamp, event_type string, value double",
     )
-    merge(batch, 0)
-    first = _rows_set(spark.read.parquet(os.path.join(store, "data")))
+    write(batch, 0)
+    first = _rows_set(spark.read.parquet(path))
 
-    # crash simulation: the aside-rename happened but the swap-in didn't
-    os.rename(store, store + "_old")
-    assert _rows_set(spark.read.parquet(os.path.join(store + "_old", "data"))) == first
+    # crash simulation: the aside-rename happens, the swap-in does not
+    rename = os.rename
 
-    # recovery (operator moves the old copy back), then a normal merge
+    def crashing_rename(src, dst):
+        if "_tmp_" in os.path.basename(src):
+            raise OSError("simulated crash before the swap-in")
+        rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crashing_rename)
+        with pytest.raises(OSError, match="simulated crash"):
+            write(batch, 1)
+    assert _rows_set(spark.read.parquet(path + "_old")) == first
+
+    # recovery (operator moves the old copy back), then a normal write
     # completes and cleans up any leftover _old dir
-    os.rename(store + "_old", store)
-    merge(batch, 1)
-    assert not os.path.exists(store + "_old")
-    with open(os.path.join(store, "ledger.json")) as f:
-        assert json.load(f)["watermark"] == 1
+    os.rename(path + "_old", path)
+    write(batch, 1)
+    assert not os.path.exists(path + "_old")
+    if target == "store":
+        assert stream.read_ledger(path)[0] == 1  # the watermark
+    else:
+        assert _rows_set(wh.read("t")) == first
 
 
 def _throttle_pair(spark, rows, gap_us, chunk_us, method="expr"):

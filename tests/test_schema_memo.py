@@ -118,3 +118,31 @@ def test_read_snapshot_of_own_version_skips_inference(spark, sf_dir, tmp_path):
     got, n = _jobs(spark, lambda: wh.read_snapshot("prio"))
     assert n >= 1
     assert got.schema == spark.read.parquet(ext).schema
+
+
+def test_warehouse_read_after_rewrite_skips_inference(spark, sf_dir, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
+    wh.ensure("o", o)
+    wh.merge_load("o", o, ["o_orderkey"])
+    got, n = _jobs(spark, lambda: wh.read("o"))
+    assert n == 0
+    assert got.schema == spark.read.parquet(wh.path("o")).schema
+    assert got.count() == o.count()
+
+    # an append adds files the memo has not seen: the next read infers
+    wh.append("o", o.limit(5))
+    got, n = _jobs(spark, lambda: wh.read("o"))
+    assert n >= 1
+    assert got.count() == o.count() + 5
+
+
+def test_fold_store_read_after_stream_skips_inference(spark, sf_dir, tmp_path):
+    from nyc_taxi_data_prediction_pyspark_spark.streaming import pipeline as stream
+
+    work = str(tmp_path / "hll")
+    stream.hll_streaming_ingest(spark, sf_dir, work, n_arrival_files=2)
+    store = os.path.join(work, "store")
+    got, n = _jobs(spark, lambda: _schema_memo.read_parquet(spark, store))
+    assert n == 0
+    assert got.schema == spark.read.parquet(store).schema

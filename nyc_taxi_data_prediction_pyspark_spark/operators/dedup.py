@@ -1296,13 +1296,15 @@ def coverage_greedy_selection(
     stable; docs with fewer than ``n`` tokens have no shingles and are
     outside the pool on both engines. No floats anywhere.
 
-    Scale shape: the shingle frame is built once and localCheckpointed
-    (the lazy-checkpoint rule of ``operators/_fixpoint.py``); each round is
-    one anti-join against the covered set + one map-side-combinable
-    groupBy + a TakeOrdered(1), and the covered set is re-checkpointed
-    per round so the k-step lineage never re-derives earlier rounds.
-    Work per round is O(|remaining shingle pairs|); k is a small
-    constant. The greedy itself is inherently sequential — that is the
+    Scale shape: the shingle frame is built once and localCheckpointed;
+    the state is one covered frame ``(shingle, __id)`` on the shared
+    fixed-point loop, checkpointed per round.  Each round is one
+    anti-join against the covered set (checkpointed: it feeds both the
+    gain aggregation and the appended rows) + one map-side-combinable
+    groupBy + a TakeOrdered(1), and appends the pick's newly covered
+    shingles — or one ``(NULL, id)`` row when it gains nothing.  Work
+    per round is O(|remaining shingle pairs|); k is a small constant.
+    The greedy itself is inherently sequential — that is the
     algorithm, not a Spark limitation; each round is fully
     distributed.
 
@@ -1312,51 +1314,32 @@ def coverage_greedy_selection(
     """
     pairs = (
         word_shingles(df, text_col=text_col, id_col=id_col, n=n)
-        .select(F.col(id_col).alias("__id"), "shingle")
+        .select("shingle", F.col(id_col).alias("__id"))
         .localCheckpoint(eager=False)
     )
     pool = pairs.select("__id").distinct()
-    covered = pairs.select("shingle").limit(0)
-    out = None
-    for r in range(1, int(k) + 1):
-        # the round's anti-join feeds BOTH the gain aggregation and the
-        # covered-set update (the pick's rows in it are exactly its
-        # newly covered shingles) — truncate it once (round-13: the old
-        # form re-ran the anti-join for the update and then re-deduped
-        # the whole covered set, though the update rows are per-doc
-        # distinct and disjoint from covered by construction)
-        uncov = pairs.join(covered, "shingle", "left_anti").localCheckpoint(
-            eager=False
-        )
-        uncovered_gain = uncov.groupBy("__id").agg(
-            F.count(F.lit(1)).cast("bigint").alias("__g")
-        )
-        gains = pool.join(uncovered_gain, "__id", "left").select(
-            "__id", F.coalesce(F.col("__g"), F.lit(0)).cast("bigint").alias("gain")
-        )
+
+    def pick_one(covered: DataFrame) -> DataFrame:
+        uncov = pairs.join(covered, "shingle", "left_anti").localCheckpoint(eager=False)
+        gain = uncov.groupBy("__id").agg(F.count(F.lit(1)).alias("__g"))
         pick = (
-            gains.orderBy(F.col("gain").desc(), F.col("__id").asc())
+            pool.join(covered, "__id", "left_anti")
+            .join(gain, "__id", "left")
+            .orderBy(F.coalesce("__g", F.lit(0)).desc(), F.col("__id").asc())
             .limit(1)
-            .localCheckpoint(eager=False)
         )
-        covered = (
-            covered.unionByName(
-                uncov.join(pick.select("__id"), "__id").select("shingle")
-            )
-            .localCheckpoint(eager=False)
-        )
-        row = pick.select(
-            F.lit(r).cast("int").alias("round"),
-            F.col("__id").alias(id_col),
-            "gain",
-        )
-        out = row if out is None else out.unionByName(row)
-        pool = pool.join(pick.select("__id"), "__id", "left_anti")
-    # covered_total after round r == Σ_{i<=r} gain_i (each round adds
-    # exactly its gain of new shingles), so the per-round COUNT(covered)
-    # aggregation + 1-row broadcast collapses to one cumulative window
-    # over the k-row output frame
-    w_rounds = W.orderBy("round").rowsBetween(W.unboundedPreceding, W.currentRow)
-    return out.withColumn(
-        "covered_total", F.sum("gain").over(w_rounds).cast("bigint")
+        return covered.unionByName(pick.select("__id").join(uncov, "__id", "left"))
+
+    covered = fx.iterate(pairs.limit(0), pick_one, int(k))
+    # a pick's gain never exceeds the previous round's (gains only shrink
+    # as coverage grows, and the previous pick had the largest), and
+    # equal gains were picked in id order — so (gain DESC, id ASC) IS
+    # the round order; covered_total after round r is Σ_{i<=r} gain_i
+    out = covered.groupBy("__id").agg(F.count("shingle").alias("gain"))
+    w = W.orderBy(F.col("gain").desc(), F.col("__id").asc())
+    return out.select(
+        F.row_number().over(w).cast("int").alias("round"),
+        F.col("__id").alias(id_col),
+        "gain",
+        F.sum("gain").over(w).cast("bigint").alias("covered_total"),
     )

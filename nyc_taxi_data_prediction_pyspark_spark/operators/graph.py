@@ -321,35 +321,40 @@ def bfs_levels(
     the ``sources`` node set — the reachability/blast-radius primitive
     (supply-chain exposure, fraud-ring neighborhoods).
 
-    Frontier expansion with level-synchronous semantics: each round
-    joins the CURRENT frontier (not the visited set) against the edge
-    list and anti-joins the visited set, so a node's hop is the FIRST
-    round that reaches it — exactly the min-hop definition, and the
-    per-round join cost is |frontier|·avg-degree, never |visited|.
-    The frontier is localCheckpointed each round (it feeds both the
-    next expansion and the visited union — same double-consumer rule
-    as pack_documents); the visited set is checkpointed at the end.
-    All arithmetic is integer, so the oracle can unroll the same
-    rounds as CTEs and value-hash-match (the q109/q142 contract).
+    Frontier expansion with level-synchronous semantics: the state is
+    one frame ``visited(node, hop, fresh)``, and each round joins only
+    its ``fresh`` rows (the frontier, not the visited set) against the
+    edge list at ``hop + 1`` and anti-joins the whole state, so a
+    node's hop is the FIRST round that reaches it — exactly the min-hop
+    definition, and the per-round join cost is |frontier|·avg-degree,
+    never |visited|.  The old rows carry on with ``fresh = false``.
+
+    Scale shape: the edge frame is src-partitioned and cached once;
+    the state is checkpointed per round by the shared fixed-point loop
+    (``fx.iterate``), so its three consumers (frontier, anti-join,
+    union) read it once.  All arithmetic is integer, so the oracle can
+    unroll the same rounds as CTEs and value-hash-match (the q109/q142
+    contract).
 
     Returns (node, hop), hop in [0, max_hops]."""
     e = fx.edge_frame(edges, src, dst, assume_distinct=assume_distinct)
     e = e.repartition("src").cache()
 
-    frontier = sources.select(F.col(sources.columns[0]).alias("node")).distinct()
-    frontier = frontier.localCheckpoint(eager=False)
-    visited = frontier.withColumn("hop", F.lit(0).cast("int"))
-    for k in range(1, max_hops + 1):
+    def expand(v: DataFrame) -> DataFrame:
+        front = v.where("fresh")
         nxt = (
-            e.join(frontier, e["src"] == frontier["node"])
-            .select(F.col("dst").alias("node"))
+            e.join(front, e["src"] == front["node"])
+            .select(F.col("dst").alias("node"), (F.col("hop") + 1).alias("hop"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=False)
+            .join(v.select("node"), "node", "left_anti")
         )
-        visited = visited.union(nxt.withColumn("hop", F.lit(k).cast("int")))
-        frontier = nxt
-    return fx.finish(visited, e)
+        return v.withColumn("fresh", F.lit(False)).unionByName(
+            nxt.withColumn("fresh", F.lit(True))
+        )
+
+    seeds = sources.select(F.col(sources.columns[0]).alias("node")).distinct()
+    v = seeds.select("node", F.lit(0).alias("hop"), F.lit(True).alias("fresh"))
+    return fx.finish(fx.iterate(v, expand, max_hops).select("node", "hop"), e)
 
 
 def kcore_peel(
@@ -423,50 +428,41 @@ def hits_quotient(
     multiply-free round, so iterations never compound the bound.
 
     Scale shape: the edge frame is deduped (unless ``assume_distinct``)
-    and localCheckpointed ONCE; each iteration is two equi-join +
-    aggregation passes keyed on dst then src, plus two 1-row total
-    frames broadcast for the quotient — no driver-side data motion.
-    Nodes missing a half-step's sum (no in- or no out-edges) carry 0
-    for that score, the standard bipartite-HITS behavior. Returns
-    (node, hub, auth) over all nodes, zero-filled."""
+    and localCheckpointed ONCE; each half-step (``half``) is one
+    equi-join + aggregation keyed on an endpoint, with its raw sums
+    checkpointed for their two consumers (quotient + normalize), plus
+    a 1-row total frame broadcast for the quotient.  The hub state runs
+    on the shared fixed-point loop; the last round is unrolled so it
+    keeps the authority scores.  The initial mass SCALE div N comes
+    from a 1-row node count broadcast into the start frame, so setup
+    runs no DataFrame action.  Nodes missing a half-step's sum (no in- or
+    no out-edges) carry 0 for that score, the standard bipartite-HITS
+    behavior. Returns (node, hub, auth) over all nodes, zero-filled."""
     if iters < 1:
         raise ValueError("hits_quotient needs iters >= 1 (no authority scores exist before the first half-step)")
     e = fx.edge_frame(edges, src, dst, assume_distinct=assume_distinct)
     e = e.localCheckpoint(eager=False)
     nodes = fx.node_set(e).localCheckpoint(eager=False)
-    n = nodes.count()  # metadata scalar: sizes the initial mass only
-    h = nodes.select("node", F.lit(SCALE // max(n, 1)).alias("s"))
-    a = None
-    for _ in range(iters):
-        a_raw = (
-            e.join(h.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
+
+    def half(scores: DataFrame, frm: str, to: str) -> DataFrame:
+        raw = (
+            e.join(scores.withColumnRenamed("node", frm), frm)
+            .groupBy(to)
             .agg(F.sum("s").alias("raw"))
             # double consumer (quotient agg + normalized scores): without
-            # truncation each consumer re-runs the |E| join+agg — measured
-            # as the q190 job-count explosion (round-13 optimization)
+            # truncation each consumer re-runs the |E| join+agg
             .localCheckpoint(eager=False)
         )
-        qa = a_raw.agg(
-            F.greatest(F.expr(f"sum(raw) div {SCALE}L"), F.lit(1)).alias("q")
+        q = raw.agg(F.greatest(F.expr(f"sum(raw) div {SCALE}L"), F.lit(1)).alias("q"))
+        return raw.crossJoin(F.broadcast(q)).select(  # 1-row quotient
+            F.col(to).alias("node"), F.expr("raw div q").alias("s")
         )
-        a = (
-            a_raw.join(F.broadcast(qa), how="cross")  # 1-row quotient
-            .select(F.col("dst").alias("node"), F.expr("raw div q").alias("s"))
-        )
-        h_raw = (
-            e.join(a.withColumnRenamed("node", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.sum("s").alias("raw"))
-            .localCheckpoint(eager=False)  # same double-consumer rule
-        )
-        qh = h_raw.agg(
-            F.greatest(F.expr(f"sum(raw) div {SCALE}L"), F.lit(1)).alias("q")
-        )
-        h = (
-            h_raw.join(F.broadcast(qh), how="cross")  # 1-row quotient
-            .select(F.col("src").alias("node"), F.expr("raw div q").alias("s"))
-        ).localCheckpoint(eager=False)
+
+    n = nodes.agg(F.greatest(F.count(F.lit(1)), F.lit(1)).alias("n"))  # 1-row
+    h = nodes.crossJoin(F.broadcast(n)).select("node", F.expr(f"{SCALE}L div n").alias("s"))
+    h = fx.iterate(h, lambda h: half(half(h, "src", "dst"), "dst", "src"), iters - 1)
+    a = half(h, "src", "dst")
+    h = half(a, "dst", "src")
     return (
         nodes.join(h.withColumnRenamed("s", "hub"), "node", "left")
         .join(a.withColumnRenamed("s", "auth"), "node", "left")

@@ -10,8 +10,11 @@ partition key, whole-stage-codegen'd.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
+
+from . import _fixpoint as fx
 
 
 def top_per_group(
@@ -1090,45 +1093,38 @@ def haar_energy(
     integer), energy_share (one division by the total — the spectrum).
 
     Scale: level l runs one map-side-combinable groupBy on index div 2
-    over a frame that HALVES each level; the input is a
+    over a frame that HALVES each level; the levels run on the shared
+    fixed-point loop, which checkpoints each level's frame for its two
+    consumers (energy agg + next level); the input is a
     time-granularity series (metadata-sized — document at call sites).
     """
+    def pair_up(cur: DataFrame) -> DataFrame:
+        signed = F.when(F.col("__i") % 2 == 0, F.col("__x")).otherwise(-F.col("__x"))
+        return cur.groupBy(F.expr("__i div 2").alias("__i")).agg(
+            F.count(F.lit(1)).alias("__cnt"),
+            F.sum(signed).cast("bigint").alias("__d"),
+            F.sum("__x").cast("bigint").alias("__x"),
+        ).where(F.col("__cnt") == 2)
+
     cur = series.select(
         F.col(index_col).cast("bigint").alias("__i"),
         F.col(value_col).cast("bigint").alias("__x"),
     )
-    per_level = []
-    for lvl in range(1, levels + 1):
-        paired = cur.groupBy(F.expr("__i div 2").alias("__pi")).agg(
-            F.count(F.lit(1)).alias("__cnt"),
-            F.sum(
-                F.when(F.col("__i") % 2 == 0, F.col("__x")).otherwise(-F.col("__x"))
-            )
-            .cast("bigint")
-            .alias("__d"),
-            F.sum("__x").cast("bigint").alias("__a"),
-        ).where(F.col("__cnt") == 2)
-        # localCheckpoint: consumed twice (energy agg + next level) and
-        # each level must see a FROZEN parent, not a recomputed lineage
-        paired = paired.localCheckpoint(eager=False)
-        scale = 1 << (levels - lvl)
-        per_level.append(
-            paired.agg(
-                F.lit(lvl).alias("level"),
-                F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-                F.coalesce(
-                    F.sum(
-                        (F.col("__d") * F.col("__d")).cast("decimal(38,0)")
-                        * F.lit(scale).cast("decimal(38,0)")
-                    ),
-                    F.lit(0).cast("decimal(38,0)"),
-                ).alias("detail_energy_num"),
-            )
+    per_level = [
+        paired.agg(
+            F.lit(lvl).alias("level"),
+            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+            F.coalesce(
+                F.sum(
+                    (F.col("__d") * F.col("__d")).cast("decimal(38,0)")
+                    * F.lit(1 << (levels - lvl)).cast("decimal(38,0)")
+                ),
+                F.lit(0).cast("decimal(38,0)"),
+            ).alias("detail_energy_num"),
         )
-        cur = paired.select(F.col("__pi").alias("__i"), F.col("__a").alias("__x"))
-    spec = per_level[0]
-    for p in per_level[1:]:
-        spec = spec.unionByName(p)
+        for lvl, paired in enumerate(fx.rounds(cur, pair_up, levels), 1)
+    ]
+    spec = reduce(DataFrame.unionByName, per_level)
     wt = W.partitionBy()  # `levels`-row frame — metadata-sized
     total = F.sum("detail_energy_num").over(wt)
     return spec.select(

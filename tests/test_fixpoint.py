@@ -12,6 +12,7 @@ from nyc_taxi_data_prediction_pyspark_spark.operators import (
     dedup,
     graph,
     mining,
+    windows,
 )
 
 _EDGES = [(1, 2), (2, 1), (2, 3), (3, 2), (3, 1), (1, 3), (3, 4), (4, 3), (5, 6), (6, 5)]
@@ -53,6 +54,10 @@ def _transitions(spark):
     )
 
 
+def _series(spark):
+    return spark.createDataFrame([(i, i * i) for i in range(16)], ["i", "x"])
+
+
 CALLS = {
     "pagerank_fixedpoint": lambda s: graph.pagerank_fixedpoint(_edges(s)),
     "personalized_pagerank": lambda s: graph.personalized_pagerank(_edges(s), _seeds(s)),
@@ -76,6 +81,9 @@ CALLS = {
         _transitions(s), from_col="i", to_col="j", count_col="n", domain_bounded=False
     ),
     "semdedup": lambda s: dedup.semdedup(_emb(s), k=2, threshold=0.99),
+    "haar_energy": lambda s: windows.haar_energy(
+        _series(s), index_col="i", value_col="x", levels=3
+    ),
 }
 
 

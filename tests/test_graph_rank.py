@@ -228,6 +228,23 @@ def test_hits_bipartite_authority_ordering(spark):
     assert res[1]["auth"] == 0 and res[1]["hub"] > 0
 
 
+def test_hits_setup_runs_no_dataframe_action(spark, monkeypatch):
+    """The initial mass SCALE div N is a broadcast 1-row node count, not
+    a ``count()`` action: building the HITS frame calls no
+    DataFrame action.  (Its lazy checkpoints still run their shuffle
+    stages under AQE, so the build's job count cannot be 0.)"""
+    df = spark.createDataFrame([(1, 10), (2, 10), (3, 11)], ["src", "dst"])
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("DataFrame action while building hits_quotient")
+
+    for action in ("collect", "count", "first", "head", "isEmpty", "take", "toPandas"):
+        monkeypatch.setattr(type(df), action, refuse)
+    out = graph.hits_quotient(df, iters=2)
+    monkeypatch.undo()
+    assert out.count() == 5
+
+
 def _lpa_reference(edges, iters=3):
     """Plain-Python synchronous LPA, ties -> smallest label."""
     nodes = sorted({u for u, _ in edges} | {v for _, v in edges})

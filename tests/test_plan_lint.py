@@ -42,7 +42,7 @@ BNL_ALLOWED = {
     "q181_backtest_mape": "hour spine x #event-types frame (both metadata-sized) crossed",
     "q186_bigram_nll": "1-row bigram-vocab broadcast onto the scored stream",
     "q189_dsir_importance": "1-row model-totals broadcast onto the feature stream",
-    "q190_hits": "per-iteration 1-row quotient broadcasts (integer normalization)",
+    "q190_hits": "1-row initial-mass (node count) broadcast + per-half-step 1-row quotient broadcasts (integer normalization)",
     "q193_corpus_gates": "1-row token-total broadcast inside the unigram-NLL gate (the q166 shape)",
     "q195_bm25_rrf_fusion": "1-row corpus-stats broadcast (BM25 N / avg doc length)",
     "q201_sq8_quantization_recall": "1-row per-dimension min/max scales broadcast (SQ8 quantizer metadata)",

@@ -19,6 +19,7 @@ from __future__ import annotations
 import random
 from fractions import Fraction
 
+import pytest
 from pyspark.sql import Row
 
 from nyc_taxi_data_prediction_pyspark_spark.operators import mining
@@ -115,10 +116,12 @@ def _brute_coverage(doc_shingles, k):
     return out
 
 
-def test_coverage_greedy_matches_python_greedy(spark):
+@pytest.mark.parametrize("k", [4, 5])
+def test_coverage_greedy_matches_python_greedy(spark, k):
     """Deterministic docs with engineered overlaps: the Spark greedy
     must equal the set-based Python greedy round for round (including
-    the gain-tie doc_id tie-break)."""
+    the gain-tie doc_id tie-break).  At k=5 the last two picks (docs 2
+    and 5) both gain 0, so their rounds pin the id order of a tie."""
     words = [f"w{i}" for i in range(30)]
     docs = {
         1: " ".join(words[0:12]),        # 10 shingles
@@ -132,12 +135,14 @@ def test_coverage_greedy_matches_python_greedy(spark):
         w = text.split()
         return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
 
-    expect = _brute_coverage({d: shingles(t) for d, t in docs.items()}, 4)
+    expect = _brute_coverage({d: shingles(t) for d, t in docs.items()}, k)
+    if k == 5:
+        assert expect[3:] == [(4, 2, 0, 28), (5, 5, 0, 28)]
     out = coverage_greedy_selection(
         spark.createDataFrame([Row(doc_id=d, text=t) for d, t in docs.items()]),
         text_col="text",
         id_col="doc_id",
-        k=4,
+        k=k,
         n=3,
     ).collect()
     got = [(r["round"], r.doc_id, r.gain, r.covered_total) for r in out]

@@ -89,7 +89,7 @@ NOTES = {
     "q157_pps_sample": "two-phase prefix sum (pack machinery) + 1-row total broadcast; hit counts are BIGINT ceil-division grid arithmetic",
     "q159_hll_daily_rollup": "per-(group, day) registers merged by register-wise MAX — distinct-count rollup with no rescan of raw history",
     "q160_count_min_sketch": "in-row cell explode (depth entries) + one counter agg; point estimates probe via broadcast of the depth×width sketch",
-    "q162_bfs_reach": "per round: frontier⋈src-partitioned edges + anti-join against visited; frontier checkpointed, hop = first-reaching round",
+    "q162_bfs_reach": "one-frame state visited(node, hop, fresh) on fx.iterate: per round the fresh rows ⋈ src-partitioned edges at hop+1, anti-joined against the state and unioned with the old rows (fresh=false); state checkpointed per round, hop = first-reaching round",
     "q163_kmv_overlap": "grouped top-k sketch (k rows/group); union/intersection algebra over ≤2k rows; estimates are single divisions of exact integers",
     "q164_chi_square": "margins rejoin the cell domain via a constant-key equi join (full grid incl. zero cells); 1-row grand total broadcast",
     "q165_stream_outer_attribution": "watermarked left-outer stream-stream join; unmatched state evicted (emitting NULLs) when the min-of-sides watermark passes the join window",
@@ -99,7 +99,7 @@ NOTES = {
     "q174_naive_bayes": "model = (vocab x classes) count frame; scoring joins test tokens on token + crosses the #classes prior frame; min-struct argmax",
     "q168_mad_outliers": "ONE raw scan to the checkpointed (flag, price, count) histogram; both discrete medians rank-select off it (weight_col path) and |price-med| derives the MAD domain without a second scan; #groups-row med/MAD broadcasts; cut totals ride a window over the cumsum exchange (r13 — no totals join), fracs are a literal explode",
     "q175_containment_excerpts": "contained-side rare-first prefixes probe the full token index; no container length filter; verify via array_intersect join-back",
-    "q302_coverage_greedy": "shingle frame built once + localCheckpointed; each greedy round is one checkpointed anti-join feeding BOTH the gain agg and the covered-set update (no re-dedup, r13) + TakeOrdered(1); covered_total = cumulative window over the k-row output",
+    "q302_coverage_greedy": "shingle frame built once + localCheckpointed; one-frame covered(shingle, id) state on fx.iterate: each round is one checkpointed anti-join feeding BOTH the gain agg and the appended rows + TakeOrdered(1) left-joined once (a (NULL, id) row for a zero gain); output = per-id count with round = row_number over (gain DESC, id ASC) and covered_total = cumulative sum",
     "q182_personalized_pagerank": "teleport-to-seed-set fixed point: cached src-partitioned fanout, per-iteration |V| rank shuffle only, seed flag rides the cached nodes frame",
     "q183_frequent_triples": "double downward closure: item prune -> in-row triple gen -> three pair semi-joins kill candidates before the counting shuffle",
     "q184_sliding_hll_distinct": "per-day registers once, contribution explode to 7 windows (register volume, not data), max-merge per (window,bucket) — history never rescanned",
@@ -110,7 +110,7 @@ NOTES = {
     "q187_mixture_interleave": "per-source md5 ranks then one global WFQ-finish-time rank, both via the two-phase prefix-sum machinery — no global single-partition window",
     "q188_duplicate_spans": "positional spans to constant-width md5 keys before the frequency shuffle; coverage explode bounded at n rows per duplicated span",
     "q189_dsir_importance": "one conditional-agg pass fits BOTH multinomials; bucket-row model broadcast back onto the feature stream; 1-row totals cross",
-    "q190_hits": "edge frame checkpointed once; per half-step one equi-join + agg keyed on an endpoint plus a 1-row quotient broadcast — raw score frames checkpointed so the double consumption (quotient + normalize) computes once (r13)",
+    "q190_hits": "edge frame checkpointed once; initial mass = 1-row node count broadcast (no setup action); one half() helper per half-step: equi-join + agg keyed on an endpoint, raw sums checkpointed for their two consumers (quotient + normalize), 1-row quotient broadcast; hub state on fx.iterate, last round unrolled to keep the authorities",
     "q191_label_propagation": "per round one |E| join on dst + two map-side-combinable aggs; struct-max mode (no window); |V| label frame checkpointed per round",
     "q192_semdedup": "k-row centroid broadcast for assignment; pairwise cosine confined WITHIN clusters by the equi-join on cluster id — never a corpus cross-join",
     "q193_corpus_gates": "three independent linear signal passes (lang/repetition/LM) composed by two left equi-joins on the id — no gate rescans another's input",
@@ -158,7 +158,7 @@ NOTES = {
     "q235_bandit_replay": "per-(day,arm) inclusive windows + |arms| forward fills in ONE day-ordered window exec; pick via row_number over 5-row per-step partitions; days independent",
     "q236_spearman": "two distinct-value collapses + two-phase midranks (never a data-sized single-task window); two equi-join rank attachments; one 6-sum moment reduce",
     "q237_cross_corr_lags": "all 25 lag leads in ONE window exec over the metadata-sized hour grid; one 150-sum reduce; best lag via struct-max on the 25-row frame",
-    "q238_haar_energy": "level l = one combinable groupBy on i div 2 over a frame that HALVES per level; integer folds; per-level frames localCheckpointed for their two consumers",
+    "q238_haar_energy": "level l = one combinable groupBy on i div 2 over a frame that HALVES per level; integer folds; levels run on fx.rounds, which checkpoints each level frame for its two consumers (energy agg + next level)",
     "q239_isotonic_calibration": "one binning pass; the PAV fit is O(bins^3) nested-HOF codegen on ONE metadata row — a sequential merge algorithm with no sequential plan",
     "q240_woe_iv": "1-row decile-cuts broadcast; in-row comparison-fold bucketing; the WOE/IV algebra lives on the 10-row bucket frame (metadata windows)",
     "q241_deletion_neighborhood": "variant explode (|rows| x len+1) + ONE equi-join on the xxhash64 variant key (8-byte shuffle rows, r13) — a complete lev<=1 candidate set with no cross-join; in-row levenshtein verify",

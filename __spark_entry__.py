@@ -4502,53 +4502,41 @@ def q196_luhn_pii_audit(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _doc_frames(docs: DataFrame) -> DataFrame:
+    """q197's synthetic 8x8 frame per ``doc_id`` (FRAME_SCHEMA), built
+    natively. md5-derived pixels (the engine-stable hashing
+    convention): arithmetic patterns — polynomials mod 256,
+    multiplicative mid-bits of sequential inputs — leave cross-group
+    structure that manufactures quadratic near-dup classes at scale;
+    the four 16-byte digests of ``md5(g || '_j')``, g = doc_id DIV 2,
+    give each id pair an independent uniform image, and the odd
+    member's first pixel is shifted by 96 (mod 256)."""
+    hexs = " || ".join(f"md5((doc_id DIV 2) || '_{j}')" for j in range(4))
+    return docs.selectExpr("doc_id", f"{hexs} AS hexs").selectExpr(
+        "doc_id AS media_id",
+        "0 AS frame_idx",
+        "0L AS ts_ms",
+        "8 AS width",
+        "8 AS height",
+        "unhex(lpad(hex((CAST(conv(substring(hexs, 1, 2), 16, 10) AS INT)"
+        " + IF(doc_id % 2 = 1, 96, 0)) % 256), 2, '0') || substring(hexs, 3)) AS frame",
+    )
+
+
 def q197_phash_near_dupes(spark: SparkSession, sf: str) -> DataFrame:
     """Perceptual-hash image near-dup (multimodal.frame_phash +
-    phash_near_dupes): synthesize one deterministic 8x8 grayscale
-    frame per document — consecutive doc-id pairs share a base image,
-    the odd member perturbed in one pixel, the re-encode/crop family
-    aHash is built to collapse — run the REAL numpy aHash over the
-    binary frames (mapInPandas), then the banded-Hamming near-dup join
-    (exact for Hamming <= bands-1 = 3 by pigeonhole). Because each 8x8
-    block is a single pixel, the oracle replays the whole pipeline —
-    block means, grid-mean threshold, row-major bit pack, XOR popcount
-    — arithmetically from doc_id, so the binary codec path is
+    phash_near_dupes): one deterministic 8x8 grayscale frame per
+    document, built natively — consecutive doc-id pairs share a base
+    image, the odd member perturbed in one pixel, the re-encode/crop
+    family aHash is built to collapse — then the REAL numpy aHash over
+    the binary frames (mapInPandas, the query's one Python crossing per
+    row), then the banded-Hamming near-dup match (exact for Hamming <=
+    bands-1 = 3 by pigeonhole). Because each 8x8 block is a single
+    pixel, the oracle replays the whole pipeline — block means,
+    grid-mean threshold, row-major bit pack, XOR popcount —
+    arithmetically from doc_id, so the binary codec path is
     value-hash-checked end to end, not just plumbing-tested."""
-    import numpy as np
-    import pandas as pd
-
-    from nyc_taxi_data_prediction_pyspark_spark.operators.multimodal import FRAME_SCHEMA
-
-    ids = load(spark, sf, "documents").select("doc_id")
-
-    def synth(it):
-        for pdf in it:
-            out = []
-            for did in pdf["doc_id"]:
-                # md5-derived pixels (the engine-stable hashing
-                # convention): arithmetic patterns — polynomials mod
-                # 256, multiplicative mid-bits of sequential inputs —
-                # leave cross-group structure that manufactures
-                # quadratic near-dup classes at scale; four 16-byte
-                # digests give each group an independent uniform image
-                import hashlib
-
-                g = int(did) // 2
-                px = np.frombuffer(
-                    b"".join(
-                        hashlib.md5(f"{g}_{j}".encode()).digest() for j in range(4)
-                    ),
-                    dtype=np.uint8,
-                ).copy()
-                if int(did) % 2 == 1:
-                    px[0] = (int(px[0]) + 96) % 256
-                out.append((int(did), 0, 0, 8, 8, px.tobytes()))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "frame_idx", "ts_ms", "width", "height", "frame"],
-            )
-
-    frames = ids.mapInPandas(synth, schema=FRAME_SCHEMA)
+    frames = _doc_frames(load(spark, sf, "documents"))
     ph = multimodal.frame_phash(frames)
     return multimodal.phash_near_dupes(ph, max_hamming=3, bands=4).orderBy(
         "id_a", "id_b"

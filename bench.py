@@ -282,7 +282,7 @@ HEADLINE_SKIP = {
     "q27_json_typed_stats": "JSON path extraction; shape timed by q12",
     "q28_lsh_ann": "sign-LSH ANN; cell-pruned shape timed by q19",
     "q29_ml_forecast": "closed-form regression; shape timed by q68",
-    "q30_text_embed": "Arrow pandas_udf embed; vectorized-Python cost timed by q197",
+    "q30_text_embed": "native md5-bucket embed, no Python crossing; doc-scan shape timed by q13",
     "q32_pivot": "pivot agg; grouping-sets shape timed by q31",
     "q33_distinct_aggs": "multi-distinct agg; shuffle-agg shape timed by q07",
     "q34_median_stddev": "exact percentile agg; shape timed by q152",

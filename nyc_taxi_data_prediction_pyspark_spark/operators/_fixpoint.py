@@ -1,5 +1,6 @@
 """The fixed-point loop shared by the iterative operators (graph,
-dedup.connected_components, clustering, mining's Markov frame loop).
+clustering, dedup.connected_components and coverage_greedy_selection,
+mining's Markov frame loop, windows.haar_energy).
 
 One place owns the per-round state policy:
 

@@ -414,7 +414,7 @@ def phash_near_dupes(
     max_hamming: int = 3,
     bands: int = 4,
 ) -> DataFrame:
-    """Near-duplicate media pairs by banded Hamming join over
+    """Near-duplicate media pairs by banded Hamming matching over
     perceptual hashes — the simhash_pairs machinery applied to image
     hashes: the 64-bit hash splits into ``bands`` equal bit-bands, a
     candidate pair must share at least one exact band (pigeonhole:
@@ -422,46 +422,42 @@ def phash_near_dupes(
     default 4 bands every pair at Hamming ≤ 3 is guaranteed found),
     then the exact Hamming distance filters at ``max_hamming``.
 
-    Scale: the banded equi-join bounds candidates by band-bucket
-    population — never an all-pairs comparison; one row per media is
-    assumed (pre-aggregate multi-frame media to a representative
-    frame, e.g. frame 0, before calling). Returns
-    (id_a, id_b, hamming) with id_a < id_b."""
-    from .dedup import hamming64
+    Shape: the posting-list form of ``dedup._jaccard_from_postings``,
+    not a self-join, so the hash frame (and whatever Python computed
+    it) is read once. Each (band, band key) bucket gathers its
+    ``(id, hash)`` members into one row and expands its pairs in-row;
+    a pair sharing several bands is emitted once per band and collapsed
+    by the final ``distinct``.
 
+    Scale: the gather is bounded by the bucket's population, about
+    N/2^(64/bands) for spread hashes (N/2^16 at 4 bands) — never an
+    all-pairs comparison. A degenerate bucket (many media on one band
+    key) is quadratic in pair output, exactly as under a banded
+    equi-join; if it ever needs a cap, ``ngram_jaccard_pairs``'
+    ``max_posting`` is the template. One row per media is assumed
+    (pre-aggregate multi-frame media to a representative frame, e.g.
+    frame 0, before calling). Returns (id_a, id_b, hamming) with
+    id_a < id_b."""
     if not 64 % bands == 0:
         raise ValueError("bands must divide 64")
     width = 64 // bands
     mask = (1 << width) - 1
-    h = hashes.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
-    banded = h.select(
-        "id",
-        "h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.expr(f"shiftright(h, {b * width}) & {mask}L").alias("bkey"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "h", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-    a = banded.select(
-        F.col("band"), F.col("bkey"), F.col("id").alias("id_a"), F.col("h").alias("ha")
+    keys = ", ".join(
+        f"named_struct('band', {b}, 'bkey', shiftright(h, {b * width}) & {mask}L)"
+        for b in range(bands)
     )
-    b = banded.select(
-        F.col("band"), F.col("bkey"), F.col("id").alias("id_b"), F.col("h").alias("hb")
+    posting = (
+        hashes.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
+        .selectExpr("id", "h", f"inline(array({keys}))")
+        .groupBy("band", "bkey")
+        .agg(F.collect_list(F.struct("id", "h")).alias("m"))
+        .where(F.size("m") > 1)
     )
-    return (
-        a.join(b, ["band", "bkey"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", hamming64("ha", "hb").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return posting.selectExpr(
+        "inline(filter(flatten(transform(m, x -> transform(m, y -> named_struct("
+        "'id_a', x.id, 'id_b', y.id, 'hamming', bit_count(x.h ^ y.h))))),"
+        f" p -> p.id_a < p.id_b AND p.hamming <= {max_hamming}))"
+    ).distinct()
 
 
 def scene_changes(

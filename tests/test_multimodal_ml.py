@@ -110,6 +110,47 @@ def test_embeddings_deterministic(spark, sf_dir):
     assert all(len(v) == EMB_DIM for v in e1.values())
 
 
+def _bow_reference(text):
+    """The hashed bag-of-words stand-in in plain Python: md5 bucket of
+    each ``str.split()`` token of the lower-cased text, histogram over
+    the token count, rounded to float32 like the FloatType column."""
+    import hashlib
+
+    import numpy as np
+
+    v = [0.0] * EMB_DIM
+    for tok in (text or "").lower().split():
+        v[int(hashlib.md5(tok.encode()).hexdigest()[:8], 16) % EMB_DIM] += 1.0
+    s = sum(v) or 1.0
+    return [float(np.float32(x / s)) for x in v]
+
+
+def test_native_embeddings_bit_equal_python_reference(spark, sf_dir):
+    """The native stand-in encoder equals the Python reference bit for
+    bit — on the corpus and on rows where Python's whitespace set
+    (NBSP, ideographic space, \\x1c-\\x1f), NULL, empty text and
+    non-ASCII case mapping would expose a narrower split or lower."""
+    extra = [
+        "a\xa0b",
+        "x\u3000y z",
+        "p\x1cq",
+        "  lead  trail ",
+        "",
+        None,
+        "TAB\there\nnl",
+        "ΑΣ Straße İx",
+    ]
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text").unionByName(
+        spark.createDataFrame(
+            [(-1 - i, t) for i, t in enumerate(extra)], "doc_id long, text string"
+        )
+    )
+    got = with_embeddings(docs).collect()
+    assert len(got) == docs.count()
+    bad = [r["doc_id"] for r in got if list(r["embedding"]) != _bow_reference(r["text"])]
+    assert bad == []
+
+
 def test_forecast_pipeline_predicts(spark, sf_dir):
     events = load(spark, sf_dir, "events")
     preds = predict_demand(events)
@@ -340,6 +381,65 @@ def test_phash_banding_is_lossless_within_bands_minus_one(spark):
     }
     assert pairs.get((1, 2)) == 3
     assert (1, 3) not in pairs  # hamming 4 > max_hamming
+
+    # a 3-member bucket: 10, 11 and 12 share band 3 (the top 16 bits);
+    # 10 and 11 differ in one bit, so they share bands 1, 2 and 3 and
+    # must still be reported once; 13 shares no band with anyone
+    h1 = h0 ^ 1
+    h2 = h0 ^ (0b11 << 16) ^ (1 << 32)   # 3 bits from h0, 4 from h1
+    h3 = ~h0 & ((1 << 63) - 1)
+    hs = {10: h0, 11: h1, 12: h2, 13: h3}
+    df = spark.createDataFrame(list(hs.items()), "media_id long, phash long")
+    got = [
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in multimodal.phash_near_dupes(df, max_hamming=3).collect()
+    ]
+    want = sorted(
+        (a, b, bin((hs[a] ^ hs[b]) & ((1 << 64) - 1)).count("1"))
+        for a in hs
+        for b in hs
+        if a < b and bin((hs[a] ^ hs[b]) & ((1 << 64) - 1)).count("1") <= 3
+    )
+    assert want == [(10, 11, 1), (10, 12, 3)]
+    assert sorted(got) == want
+
+
+def test_q197_native_frames_match_python_synth(spark):
+    """q197's natively built frames equal the Python md5 synth they
+    replace, byte for byte, over even and odd ids (the odd member of
+    each pair has its first pixel shifted by 96 mod 256)."""
+    import hashlib
+
+    import numpy as np
+
+    from __spark_entry__ import _doc_frames
+
+    def synth(did):
+        px = np.frombuffer(
+            b"".join(hashlib.md5(f"{did // 2}_{j}".encode()).digest() for j in range(4)),
+            dtype=np.uint8,
+        ).copy()
+        if did % 2 == 1:
+            px[0] = (int(px[0]) + 96) % 256
+        return px.tobytes()
+
+    ids = list(range(40)) + [1_000_001, 1_000_002, 2**40 + 1, 2**62]
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    frames = _doc_frames(docs)
+    assert frames.dtypes == [
+        ("media_id", "bigint"),
+        ("frame_idx", "int"),
+        ("ts_ms", "bigint"),
+        ("width", "int"),
+        ("height", "int"),
+        ("frame", "binary"),
+    ]
+    got = {r["media_id"]: r for r in frames.collect()}
+    assert sorted(got) == sorted(ids)
+    for i in ids:
+        r = got[i]
+        assert (r["frame_idx"], r["ts_ms"], r["width"], r["height"]) == (0, 0, 8, 8)
+        assert bytes(r["frame"]) == synth(i), i
 
 
 def test_scene_changes_hand_computed(spark):

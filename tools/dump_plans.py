@@ -117,7 +117,7 @@ NOTES = {
     "q194_winnow_fingerprints": "fingerprint selection entirely in-row (narrow, zero shuffles before the per-doc rollup); O(tokens x w) window folds",
     "q195_bm25_rrf_fusion": "query-term IN filter before any shuffle; #terms-row df and 1-row corpus-stats broadcasts; rank windows only over the already-top-20 frames; fusion cost O(sum of list lengths)",
     "q196_luhn_pii_audit": "maximal-run extraction + Luhn fold fully in-row (one narrow pass); single tiny groupBy on the 2-value validity domain",
-    "q197_phash_near_dupes": "aHash in-row via one vectorized mapInPandas; banded equi-join bounds candidates by band-bucket population — never all-pairs",
+    "q197_phash_near_dupes": "frames built natively from md5; aHash via one vectorized mapInPandas, read once; band buckets gathered by one groupBy (collect_list bounded by bucket population) and pairs expanded in-row — no self-join, never all-pairs",
     "q198_degree_assortativity": "two map-side-combinable degree aggs + equi-join-back + one 5-sum moment reduce; coefficient assembled from exact BIGINT moments",
     "q199_vocab_oov": "one token explode; TakeOrdered(V) vocabulary broadcast back as a semi-join flag; per-doc then per-source map-side-combinable rollups",
     "q200_streaming_semantic_dedup": "per-batch work = |batch| x LSH bucket-mates (equi-join on bucket) + one store rewrite; the OR-fold store makes redelivery and late lower-id arrivals idempotent",

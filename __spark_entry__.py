@@ -4920,49 +4920,39 @@ def q218_linear_attribution(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _video_payloads(docs: DataFrame) -> DataFrame:
+    """q219's synthetic SRV0 video per ``doc_id``, built natively as
+    (media_id, payload): the little-endian header 'SRV0', width 8,
+    height 8, 12 frames, then 12 frames of 64 pixels. Pixel k of frame
+    f is byte k of ``md5(doc_id || '_' || f DIV 4 || '_' || k DIV 16)``
+    plus ``f % 4``, mod 256: three md5 scenes of four frames each, with
+    a one-step brightness drift inside a scene."""
+    scenes = " || ".join(f"md5(doc_id || '_' || g || '_{j}')" for j in range(4))
+    px = "lpad(hex((CAST(conv(substring(sc[f DIV 4], 2 * k + 1, 2), 16, 10) AS INT) + f % 4) % 256), 2, '0')"
+    return docs.selectExpr(
+        "doc_id", f"transform(sequence(0, 2), g -> {scenes}) AS sc"
+    ).selectExpr(
+        "doc_id AS media_id",
+        "unhex('53525630' || '0800' || '0800' || '0C00' || concat_ws('', transform(sequence(0, 11),"
+        f" f -> concat_ws('', transform(sequence(0, 63), k -> {px}))))) AS payload",
+    )
+
+
 def q219_scene_changes(spark: SparkSession, sf: str) -> DataFrame:
     """Video scene-change detection (multimodal.scene_changes):
-    synthesize one deterministic SRV0 video per document — 12 frames
-    of 8×8 pixels in 3 scenes (scene = frame div 4), each scene's base
-    image from four md5 digests of (doc, scene) with a +(frame mod 4)
-    brightness drift within the scene — then run the REAL codec path
-    (header parse + numpy SAD over the binary payloads, mapInPandas)
-    and flag boundaries at SAD ≥ 3000. Within-scene SAD is ~64 (the
+    one deterministic SRV0 video per document, built natively
+    (_video_payloads) — 12 frames of 8×8 pixels in 3 scenes (scene =
+    frame div 4), each scene's base image from four md5 digests of
+    (doc, scene) with a +(frame mod 4) brightness drift within the
+    scene — then the REAL codec path (header parse + numpy SAD over the
+    binary payloads, mapInPandas: the query's one Python crossing per
+    row) flags boundaries at SAD ≥ 3000. Within-scene SAD is ~64 (the
     drift) and boundary SAD ~5400 (independent md5 images), so the
     detector must find exactly the two scene cuts per video — and
     because every pixel is md5-derived arithmetic, the oracle replays
     decode, SAD and thresholding from doc_id, value-hash-checking the
     whole binary codec end to end (the q197 discipline)."""
-    import struct as _struct
-
-    import numpy as np
-    import pandas as pd
-
-    ids = load(spark, sf, "documents").select("doc_id")
-
-    def synth(it):
-        import hashlib
-
-        for pdf in it:
-            out = []
-            for did in pdf["doc_id"]:
-                frames = []
-                for f in range(12):
-                    base = np.frombuffer(
-                        b"".join(
-                            hashlib.md5(f"{int(did)}_{f // 4}_{j}".encode()).digest()
-                            for j in range(4)
-                        ),
-                        dtype=np.uint8,
-                    )
-                    frames.append(((base.astype(np.int64) + f % 4) % 256).astype(np.uint8))
-                payload = _struct.pack("<4sHHH", b"SRV0", 8, 8, 12) + b"".join(
-                    fr.tobytes() for fr in frames
-                )
-                out.append((int(did), payload))
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
-
-    videos = ids.mapInPandas(synth, schema="media_id long, payload binary")
+    videos = _video_payloads(load(spark, sf, "documents"))
     return multimodal.scene_changes(videos, threshold=3000).orderBy("media_id")
 
 

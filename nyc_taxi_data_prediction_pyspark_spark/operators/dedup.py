@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from . import _fixpoint as fx
-from .text import normalize_text
+from .text import normalize_sql, normalize_text
 
 
 def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFrame:
@@ -45,20 +45,62 @@ def shingle_array(text_col: str, n: int = 3, hashed: bool = False):
     exchange. ``hashed=True`` maps each shingle to xxhash64: shuffle
     rows become constant-width bigints instead of strings (collision
     odds ~m²/2⁶⁴ — negligible at any realistic corpus size)."""
-    toks = F.split(normalize_text(text_col), " ")
-    cnt = F.size(toks) - (n - 1)
-    # slice + zip_with, NOT sequence + element_at: higher-order lambdas
-    # are interpreted (no codegen), and an element_at formulation
-    # re-evaluates the split per *element*; slices evaluate it per row.
-    sh = F.slice(toks, 1, cnt)
+    return F.expr(_shingles_sql(f"split({normalize_sql(text_col)}, ' ')", n, hashed))
+
+
+def _shingles_sql(toks: str, n: int, hashed: bool) -> str:
+    """``shingle_array`` as SQL text over ``toks``, a token-array SQL
+    expression: one py4j call, where Python lambdas cost several each.
+    slice + zip_with, NOT sequence + element_at: lambdas are
+    interpreted, and element_at would evaluate ``toks`` per *element*;
+    slices evaluate it once per reference — so bind an inline split to
+    a column first (``_doc_shingles``)."""
+    cnt = f"(size({toks}) - {n - 1})"
+    sh = f"slice({toks}, 1, {cnt})"
     for j in range(1, n):
-        sh = F.zip_with(sh, F.slice(toks, j + 1, cnt), lambda x, y: F.concat_ws(" ", x, y))
+        sh = f"zip_with({sh}, slice({toks}, {j + 1}, {cnt}), (x, y) -> concat_ws(' ', x, y))"
     if hashed:
-        sh = F.transform(sh, lambda s: F.xxhash64(s))
-    # guard: short docs (cnt <= 0) must yield [] — If() short-circuits,
-    # so the negative-length slice in the taken=false branch never runs
-    empty = F.array().cast("array<bigint>" if hashed else "array<string>")
-    return F.when(cnt > 0, F.array_distinct(sh)).otherwise(empty)
+        sh = f"transform({sh}, s -> xxhash64(s))"
+    # guard: short docs (cnt <= 0) must yield [] — IF short-circuits,
+    # so the negative-length slice in the untaken branch never runs
+    empty = f"CAST(array() AS array<{'bigint' if hashed else 'string'}>)"
+    return f"IF({cnt} > 0, array_distinct({sh}), {empty})"
+
+
+def _doc_shingles(df: DataFrame, *, text_col: str, id_col: str, n: int, hashed: bool) -> DataFrame:
+    """(id, shs) per doc, empty docs included. The repartition spreads
+    a one-file docs table over all cores; the split gets its own
+    projection (CollapseProject keeps it apart, as the shingle
+    expression reads it more than once). Callers drop empty docs after
+    a generator: Catalyst pushes a filter on ``shs`` — explicit, or the
+    one it infers for ``explode(shs)`` — into the one-task scan stage,
+    which then builds every shingle array serially before the parallel
+    tasks build them again."""
+    return (
+        df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        .select(F.col(id_col), F.split(normalize_text(text_col), " ").alias("__toks"))
+        .select(F.col(id_col), F.expr(_shingles_sql("__toks", n, hashed)).alias("shs"))
+    )
+
+
+def _shingle_rows(df: DataFrame, *, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, n_sh, tok): each doc's hashed distinct shingles with its
+    shingle count. An empty doc explodes_outer to a NULL ``tok``, and
+    the filter on that generated column cannot be pushed down."""
+    return (
+        _doc_shingles(df, text_col=text_col, id_col=id_col, n=n, hashed=True)
+        .select(F.col(id_col), F.size("shs").alias("n_sh"), F.explode_outer("shs").alias("tok"))
+        .where(F.col("tok").isNotNull())
+    )
+
+
+def _pairs_sql(keep: str) -> str:
+    """SQL text: the (x, y) entry pairs of a ``docs`` posting list
+    that satisfy ``keep``, a predicate over ``p``."""
+    return (
+        "filter(flatten(transform(docs, d1 -> transform(docs, d2 -> named_struct('x', d1, 'y', d2)))),"
+        f" p -> {keep})"
+    )
 
 
 def word_shingles(
@@ -115,9 +157,6 @@ def ngram_jaccard_pairs(
     of one extra shuffle — not the default because it taxes every
     query for a pathology the cap already renders non-quadratic.
     """
-    # repartition first: a docs table read from one parquet file is one
-    # partition, which would serialize the (interpreted) shingle map —
-    # at scale the source is many splits and this is a no-op cost-wise
     # Single-pass inverted index: one shuffle groups postings per
     # shingle, pairs are generated *inside the row* from the posting
     # list (built-in higher-order fns), then one shuffle aggregates
@@ -125,17 +164,9 @@ def ngram_jaccard_pairs(
     # nothing is recomputed or cached. Set sizes ride along on the
     # posting entries. Posting lists are short by construction (cap
     # ultra-common shingles at true scale — see docstring).
-    n_part = df.sparkSession.sparkContext.defaultParallelism
-    base = (
-        df.repartition(n_part)
-        .select(F.col(id_col), shingle_array(text_col, n, hashed=True).alias("shs"))
-        .where(F.size("shs") > 0)
-    )
-    sh = base.select(
-        F.col(id_col), F.size("shs").alias("n_sh"), F.explode("shs").alias("shingle")
-    )
+    sh = _shingle_rows(df, text_col=text_col, id_col=id_col, n=n)
     posting = (
-        sh.groupBy("shingle")
+        sh.groupBy("tok")
         .agg(
             F.collect_list(
                 F.struct(F.col(id_col).alias("id"), F.col("n_sh").alias("n"))
@@ -183,18 +214,8 @@ def _jaccard_from_postings(posting: DataFrame, threshold: float) -> DataFrame:
     # length filter (similarity-join bound): jaccard(A,B) ≤ min/max of
     # the set sizes, so pairs with incompatible sizes are pruned inside
     # the row, before they ever reach the pair shuffle.
-    thr = F.lit(float(threshold))
-    pair_list = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("docs"),
-                lambda d1: F.transform(F.col("docs"), lambda d2: F.struct(d1.alias("x"), d2.alias("y"))),
-            )
-        ),
-        lambda p: (p["x"]["id"] < p["y"]["id"])
-        & (F.least(p["x"]["n"], p["y"]["n"]) >= thr * F.greatest(p["x"]["n"], p["y"]["n"])),
-    )
-    pairs = posting.select(F.explode(pair_list).alias("p"))
+    keep = f"p.x.id < p.y.id AND least(p.x.n, p.y.n) >= {float(threshold)!r}D * greatest(p.x.n, p.y.n)"
+    pairs = posting.select(F.explode(F.expr(_pairs_sql(keep))).alias("p"))
     inter = pairs.groupBy(
         F.col("p.x.id").alias("id_a"), F.col("p.y.id").alias("id_b")
     ).agg(
@@ -280,13 +301,7 @@ def prefix_filter_pairs(
     wall is fixed DAG overhead, not filtering (profiling +
     re-baseline: docs/BENCH_NOTES.md round 7)."""
     thr = F.lit(float(threshold))
-    n_part = df.sparkSession.sparkContext.defaultParallelism
-    base = (
-        df.repartition(n_part)
-        .select(F.col(id_col), shingle_array(text_col, n, hashed=True).alias("shs"))
-        .where(F.size("shs") > 0)
-    )
-    toks = base.select(F.col(id_col), F.size("shs").alias("n_sh"), F.explode("shs").alias("tok"))
+    toks = _shingle_rows(df, text_col=text_col, id_col=id_col, n=n)
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     # per-doc tokens sorted rare-first: (df, tok) IS the global order
     ordered = (
@@ -323,32 +338,18 @@ def prefix_filter_pairs(
         ).alias("docs")
     ).where(F.size("docs") > 1)
 
-    def _keep(pr):
-        nx, ny = pr["x"]["n"], pr["y"]["n"]
-        # required overlap for J >= t, relaxed a hair before ceil so
-        # double rounding can only keep an extra candidate
-        alpha = F.ceil(thr / (F.lit(1.0) + thr) * (nx + ny) - F.lit(1e-9))
-        ubound = F.lit(1) + F.least(nx - pr["x"]["i"], ny - pr["y"]["i"])
-        return (
-            (pr["x"]["id"] < pr["y"]["id"])
-            & (F.least(nx, ny) >= thr * F.greatest(nx, ny))
-            & (ubound >= alpha)
-        )
-
-    pair_list = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("docs"),
-                lambda d1: F.transform(
-                    F.col("docs"), lambda d2: F.struct(d1.alias("x"), d2.alias("y"))
-                ),
-            )
-        ),
-        _keep,
+    # required overlap for J >= t, relaxed a hair before ceil so double
+    # rounding can only keep an extra candidate, against the overlap
+    # bound 1 + min(|x| - i, |y| - j) of a match at positions (i, j)
+    t = f"{float(threshold)!r}D"
+    keep = (
+        f"p.x.id < p.y.id AND least(p.x.n, p.y.n) >= {t} * greatest(p.x.n, p.y.n)"
+        " AND 1 + least(p.x.n - p.x.i, p.y.n - p.y.i)"
+        f" >= ceil({t} / (1.0D + {t}) * (p.x.n + p.y.n) - 1e-9D)"
     )
     cand = (
-        posting.select(F.explode(pair_list).alias("pr"))
-        .select(F.col("pr.x.id").alias("id_a"), F.col("pr.y.id").alias("id_b"))
+        posting.select(F.explode(F.expr(_pairs_sql(keep))).alias("p"))
+        .select(F.col("p.x.id").alias("id_a"), F.col("p.y.id").alias("id_b"))
         .distinct()
     )
     a = ordered.select(F.col(id_col).alias("id_a"), F.col("toks").alias("toks_a"), F.col("n_sh").alias("n_a"))
@@ -728,13 +729,8 @@ def minhash_native_pairs(
 
     params = minhash_params(k, seed)
     r = k // bands
-    n_part = df.sparkSession.sparkContext.defaultParallelism
 
-    base = (
-        df.repartition(n_part)
-        .select(F.col(id_col), shingle_array(text_col, n, hashed=False).alias("shs"))
-        .where(F.size("shs") > 0)
-    )
+    base = _doc_shingles(df, text_col=text_col, id_col=id_col, n=n, hashed=False)
     hs = base.select(F.col(id_col), F.transform("shs", lambda s: md5_int60(s)).alias("hs"))
     sig = hs.select(
         F.col(id_col),
@@ -748,7 +744,11 @@ def minhash_native_pairs(
             for j in range(bands)
         ]
     )
-    banded = sig.select(F.col(id_col), "sig", F.explode(band_structs).alias("bd")).select(
+    # an empty doc's signature is all NULL (array_min of []) and it
+    # explodes NULL, i.e. no band rows; a generator input that is not a
+    # bare column gets no inferred filter to push below the repartition
+    bands_of = F.when(F.col("sig")[0].isNotNull(), band_structs)
+    banded = sig.select(F.col(id_col), "sig", F.explode(bands_of).alias("bd")).select(
         F.col(id_col), "sig", F.col("bd.band").alias("band"), F.col("bd.bkey").alias("bkey")
     )
     posting = (
@@ -756,17 +756,8 @@ def minhash_native_pairs(
         .agg(F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("sig").alias("sig"))).alias("docs"))
         .where(F.size("docs") > 1)
     )
-    pair_list = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("docs"),
-                lambda d1: F.transform(F.col("docs"), lambda d2: F.struct(d1.alias("x"), d2.alias("y"))),
-            )
-        ),
-        lambda p: p["x"]["id"] < p["y"]["id"],
-    )
     pairs = (
-        posting.select(F.explode(pair_list).alias("p"))
+        posting.select(F.explode(F.expr(_pairs_sql("p.x.id < p.y.id"))).alias("p"))
         .select(
             F.col("p.x.id").alias("id_a"),
             F.col("p.y.id").alias("id_b"),
@@ -775,11 +766,7 @@ def minhash_native_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])  # a pair can collide in several bands
     )
-    eq = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
+    eq = F.expr("aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)), 0, (acc, v) -> acc + v)")
     return (
         pairs.withColumn("est_jaccard", F.round(eq / F.lit(float(k)), 6))
         .where(F.col("est_jaccard") >= jaccard_threshold)
@@ -850,15 +837,7 @@ def containment_pairs(
     Verified-exact output: (id_a contained, id_b container,
     containment), a != b, against the all-pairs oracle (q175)."""
     thr = F.lit(float(threshold))
-    n_part = df.sparkSession.sparkContext.defaultParallelism
-    base = (
-        df.repartition(n_part)
-        .select(F.col(id_col), shingle_array(text_col, n, hashed=True).alias("shs"))
-        .where(F.size("shs") > 0)
-    )
-    toks = base.select(
-        F.col(id_col), F.size("shs").alias("n_sh"), F.explode("shs").alias("tok")
-    )
+    toks = _shingle_rows(df, text_col=text_col, id_col=id_col, n=n)
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ordered = (
         toks.join(dfreq, "tok")
@@ -931,7 +910,7 @@ def duplicate_span_coverage(
     Returns (id, n_tokens, n_spans, n_dup_spans, covered_tokens,
     dup_coverage) — dup_coverage one IEEE division, NULL-free."""
     from ..functions.hashing import md5_int60
-    from .text import normalize_text
+    from .text import normalize_sql, normalize_text
 
     toks = F.split(normalize_text(text_col), " ")
     base = (

@@ -969,13 +969,20 @@ def stationary_distribution(
 
     Scale: the transition matrix is DOMAIN-sized (#states² cells at
     worst — event-type-class domains, metadata at any corpus size), so
-    since round 13 the whole power iteration runs IN-ROW: one
-    map-side-combinable window+collect pass builds a single row of
-    (edge structs, state array), and the ``iterations`` rounds are one
-    ``F.aggregate`` fold over a literal sequence — zero per-round
+    since round 13 the whole power iteration runs IN-ROW: one collect
+    pass (a single Exchange) builds a single row of edge structs, the
+    out-degree totals n_ij / Σ_j n_ij are summed inside that row (no
+    window, so no second Exchange), and the ``iterations`` rounds are
+    one ``aggregate`` fold over a literal sequence — zero per-round
     shuffles/jobs where the frame-loop form paid a join + aggregation
     + checkpoint per round (measured 35+ Spark jobs on q267/q287; the
-    q239 isotonic in-row precedent).  Per-term arithmetic is UNCHANGED
+    q239 isotonic in-row precedent).  The in-row work is one task's:
+    O(#edges²) for the totals and O(#states² × #edges) per round (each
+    edge looks its source up in the state array by linear scan) —
+    microseconds at q267's 5 states and 25 edges.  The fold is written
+    as SQL text, so building it is a handful of py4j calls instead of
+    the ~2000 its Python-lambda form made (0.3-0.4 s of driver time
+    per build that launched no job).  Per-term arithmetic is UNCHANGED
     (same dec-quantized products, exact decimal sums — order-free, so
     the fold's left-to-right order computes the identical value) and
     the per-round membership rule (a state leaves the pi frame when no
@@ -1021,147 +1028,68 @@ def stationary_distribution(
     # |value| < 10^19 (pi ≤ 1) — a (38,18) accumulator would type its
     # additions (38,17), silently rounding the last scale digit away
     # from the distributed DECIMAL(38,18) sum it must reproduce
-    dec_t = "decimal(37,18)"
+    # accumulator precision 37: (37,18)+(37,18) → (38,18) keeps scale
+    # 18 exactly, and the cast back to (37,18) is the identity for
+    # |value| < 10^19 (pi ≤ 1) — a (38,18) accumulator would type its
+    # additions (38,17), silently rounding the last scale digit away
+    # from the distributed DECIMAL(38,18) sum it must reproduce
+    dec = "decimal(37,18)"
     e = transitions.select(
         F.col(from_col).alias("__i"),
         F.col(to_col).alias("__j"),
         F.col(count_col).cast("bigint").alias("__n"),
     )
-    from pyspark.sql import Window as W
-
-    w_i = W.partitionBy("__i")
-    edges = e.withColumn("__tot", F.sum("__n").over(w_i)).select(
-        "__i", "__j",
-        (F.col("__n").cast("double") / F.col("__tot").cast("double")).alias("__p"),
+    # __p = n_ij / tot_i with tot_i summed in-row over the collected
+    # edges, not by a window: one Exchange fewer
+    row = e.agg(F.expr("array_sort(collect_list(struct(__i, __j, __n))) AS en")).selectExpr(
+        "transform(en, ed -> named_struct('__i', ed.__i, '__j', ed.__j, '__p',"
+        " CAST(ed.__n AS DOUBLE)"
+        " / CAST(aggregate(en, 0L, (t, f) -> t + IF(f.__i = ed.__i, f.__n, 0L)) AS DOUBLE))) AS es",
+        "array_sort(array_distinct(concat(transform(en, ed -> ed.__i), transform(en, ed -> ed.__j)))) AS sts",
     )
-    row = (
-        edges.agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("__i"), F.col("__j"), F.col("__p")))
-            ).alias("es")
-        )
-        .select(
-            "es",
-            F.array_sort(
-                F.array_distinct(
-                    F.concat(
-                        F.transform("es", lambda s: s["__i"]),
-                        F.transform("es", lambda s: s["__j"]),
-                    )
-                )
-            ).alias("sts"),
-        )
-    )
-
-    def _idx(col_name, key):
-        # 1-based position of `key` in the state array (#states-bounded scan)
-        return F.array_position(F.col(col_name), key)
-
-    pi0 = F.transform(
-        "sts", lambda _: F.lit(1.0) / F.size("sts").cast("double")
-    )
-    mb0 = F.transform("sts", lambda _: F.lit(True))
-
-    # fold body (acc is a bound lambda variable, so the per-round
+    # 1-based position of a state in sts (#states-bounded scan)
+    idx = "CAST(array_position(sts, ed.__i) AS INT)"
+    # a member state reaches s along edge ed (the membership rule: a
+    # state leaves the pi frame when no in-edge from a member reaches it)
+    reach = f"ed.__j = s AND element_at(acc.mb, {idx})"
+    # one round: the per-term products are dec-quantized before the
+    # exact decimal sum; acc is a bound lambda variable, so the round's
     # expression tree stays O(#states × #edges) — no projection-
-    # collapse blowup)
-    state0 = F.struct(
-        pi0.cast("array<double>").alias("pi"),
-        mb0.alias("mb"),
-        pi0.cast("array<double>").alias("prev"),
-        mb0.alias("pm"),
+    # collapse blowup. prev/pm keep the previous round for the delta.
+    step = (
+        "named_struct("
+        f"'pi', transform(sts, s -> CAST(aggregate(es, CAST(0 AS {dec}), (a, ed) ->"
+        f" CAST(a + IF({reach}, CAST(element_at(acc.pi, {idx}) * ed.__p AS {dec}),"
+        f" CAST(0 AS {dec})) AS {dec})) AS DOUBLE)),"
+        f" 'mb', transform(sts, s -> exists(es, ed -> {reach})),"
+        " 'prev', acc.pi, 'pm', acc.mb)"
     )
-
-    def step(acc, _x):
-        new_pi = F.transform(
-            F.col("sts"),
-            lambda s: F.aggregate(
-                F.col("es"),
-                F.lit(0).cast(dec_t),
-                lambda a, ed: (
-                    a
-                    + F.when(
-                        (ed["__j"] == s)
-                        & F.element_at(acc["mb"], _idx("sts", ed["__i"]).cast("int")),
-                        (
-                            F.element_at(acc["pi"], _idx("sts", ed["__i"]).cast("int"))
-                            * ed["__p"]
-                        ).cast(dec_t),
-                    ).otherwise(F.lit(0).cast(dec_t))
-                ).cast(dec_t),
-            ).cast("double"),
-        )
-        new_mb = F.transform(
-            F.col("sts"),
-            lambda s: F.exists(
-                F.col("es"),
-                lambda ed: (ed["__j"] == s)
-                & F.element_at(acc["mb"], _idx("sts", ed["__i"]).cast("int")),
-            ),
-        )
-        return F.struct(
-            new_pi.alias("pi"),
-            new_mb.alias("mb"),
-            acc["pi"].alias("prev"),
-            acc["mb"].alias("pm"),
-        )
-
-    folded = row.select(
+    pi0 = "transform(sts, _ -> 1.0D / CAST(size(sts) AS DOUBLE))"
+    mb0 = "transform(sts, _ -> true)"
+    state0 = f"named_struct('pi', {pi0}, 'mb', {mb0}, 'prev', {pi0}, 'pm', {mb0})"
+    folded = row.selectExpr(
         "sts",
-        F.aggregate(
-            F.sequence(F.lit(1), F.lit(int(iterations))), state0, step
-        ).alias("st"),
+        f"aggregate(sequence(1, {int(iterations)}), {state0}, (acc, _) -> {step}) AS st",
+        # guard: sequence(1, 0) would yield [1, 0] (descending) on an
+        # empty state array and element_at(…, 0) throws
+        "IF(size(sts) > 0, sequence(1, size(sts)), CAST(array() AS array<int>)) AS ix",
     )
     # l1 delta at reported precision: Σ_s |round(member?pi:0, 9) −
     # round(prev_member?prev:0, 9)| — dec-quantized terms, exact sum
     # (the full-outer + coalesce semantics of the frame-loop form:
     # states absent from a side contribute exact 0)
-    n_states_col = F.size("sts")
-    # guard: sequence(1, 0) would yield [1, 0] (descending) on an empty
-    # state array and element_at(…, 0) throws — use an empty index list
-    seq_states = F.when(
-        n_states_col > 0, F.sequence(F.lit(1), n_states_col)
-    ).otherwise(F.array().cast("array<int>"))
-    delta = F.round(
-        F.aggregate(
-            seq_states,
-            F.lit(0).cast(dec_t),
-            lambda a, i: (
-                a
-                + F.abs(
-                    F.round(
-                        F.when(
-                            F.element_at(F.col("st.mb"), i.cast("int")),
-                            F.element_at(F.col("st.pi"), i.cast("int")),
-                        ).otherwise(F.lit(0.0)),
-                        9,
-                    )
-                    - F.round(
-                        F.when(
-                            F.element_at(F.col("st.pm"), i.cast("int")),
-                            F.element_at(F.col("st.prev"), i.cast("int")),
-                        ).otherwise(F.lit(0.0)),
-                        9,
-                    )
-                ).cast(dec_t)
-            ).cast(dec_t),
-        ).cast("double"),
-        9,
+    delta = (
+        f"round(CAST(aggregate(ix, CAST(0 AS {dec}), (a, i) -> CAST(a + CAST(abs("
+        "round(IF(element_at(st.mb, i), element_at(st.pi, i), 0.0D), 9)"
+        " - round(IF(element_at(st.pm, i), element_at(st.prev, i), 0.0D), 9))"
+        f" AS {dec}) AS {dec})) AS DOUBLE), 9) AS l1_delta"
     )
-    items = F.filter(
-        F.transform(
-            seq_states,
-            lambda i: F.struct(
-                F.element_at(F.col("sts"), i.cast("int")).alias("state"),
-                F.round(F.element_at(F.col("st.pi"), i.cast("int")), 9).alias("pi"),
-                F.element_at(F.col("st.mb"), i.cast("int")).alias("__m"),
-            ),
-        ),
-        lambda s: s["__m"],
+    items = (
+        "filter(transform(ix, i -> named_struct('state', element_at(sts, i),"
+        " 'pi', round(element_at(st.pi, i), 9), '__m', element_at(st.mb, i))), r -> r.__m)"
     )
-    return (
-        folded.select(F.explode(items).alias("__r"), delta.alias("l1_delta"))
-        .select(F.col("__r.state").alias("state"), F.col("__r.pi").alias("pi"), "l1_delta")
+    return folded.selectExpr(f"explode({items}) AS __r", delta).selectExpr(
+        "__r.state AS state", "__r.pi AS pi", "l1_delta"
     )
 
 

@@ -107,6 +107,13 @@ def normalize_text(text: Column | str) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), WORD_SPLIT, " "))
 
 
+def normalize_sql(text_col: str) -> str:
+    """``normalize_text`` of a named column as SQL text, for callers
+    that write a whole expression as one ``F.expr``."""
+    pattern = WORD_SPLIT.replace("\\", "\\\\")
+    return f"trim(regexp_replace(lower(`{text_col}`), '{pattern}', ' '))"
+
+
 def top_ngrams(
     df: DataFrame, *, text_col: str = "text", n: int = 2, k: int = 20
 ) -> DataFrame:

@@ -442,6 +442,37 @@ def test_q197_native_frames_match_python_synth(spark):
         assert bytes(r["frame"]) == synth(i), i
 
 
+def test_q219_native_payloads_match_python_synth(spark):
+    """q219's natively built SRV0 payloads equal the Python md5 synth
+    they replace, byte for byte: header, then 12 frames whose pixels
+    are md5 bytes of (doc, frame div 4) plus frame mod 4."""
+    import hashlib
+    import struct
+
+    import numpy as np
+
+    from __spark_entry__ import _video_payloads
+
+    def synth(did):
+        frames = []
+        for f in range(12):
+            base = np.frombuffer(
+                b"".join(hashlib.md5(f"{did}_{f // 4}_{j}".encode()).digest() for j in range(4)),
+                dtype=np.uint8,
+            )
+            frames.append(((base.astype(np.int64) + f % 4) % 256).astype(np.uint8))
+        return struct.pack("<4sHHH", b"SRV0", 8, 8, 12) + b"".join(fr.tobytes() for fr in frames)
+
+    ids = list(range(40)) + [1_000_001, 1_000_002, 2**40 + 1, 2**62]
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    videos = _video_payloads(docs)
+    assert videos.dtypes == [("media_id", "bigint"), ("payload", "binary")]
+    got = {r["media_id"]: bytes(r["payload"]) for r in videos.collect()}
+    assert sorted(got) == sorted(ids)
+    for i in ids:
+        assert got[i] == synth(i), i
+
+
 def test_scene_changes_hand_computed(spark):
     """2x2 video, 4 frames: two identical, a hard cut, a near-identical
     pair -> exactly one boundary at frame 2 with the exact SAD."""

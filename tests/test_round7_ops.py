@@ -713,7 +713,9 @@ def test_stationary_inrow_equals_frameloop(spark):
     (domain_bounded=True) and the distributed frame-loop fallback
     (domain_bounded=False) must be BIT-equal — same rows, same pi and
     l1_delta doubles — including on a chain with a dangling state
-    (membership rule) and with the default #states auto-dispatch."""
+    (membership rule) and with the default #states auto-dispatch, on an
+    empty transitions frame (0 rows: the empty state-index guard) and on
+    a one-state self-loop (the in-row per-state total)."""
     rng = random.Random(14)
     k = 5
     counts = [
@@ -722,21 +724,29 @@ def test_stationary_inrow_equals_frameloop(spark):
         for j in range(k)
         if rng.random() > 0.3
     ]
-    df = spark.createDataFrame([Row(i=i, j=j, n=n) for i, j, n in counts])
     kw = dict(from_col="i", to_col="j", count_col="n", iterations=8)
-    inrow = sorted(
-        mining.stationary_distribution(df, domain_bounded=True, **kw).collect()
-    )
-    floop = sorted(
-        mining.stationary_distribution(df, domain_bounded=False, **kw).collect()
-    )
+
+    def both(rows):
+        df = spark.createDataFrame(rows, "i bigint, j bigint, n bigint")
+        inrow = sorted(
+            mining.stationary_distribution(df, domain_bounded=True, **kw).collect()
+        )
+        floop = sorted(
+            mining.stationary_distribution(df, domain_bounded=False, **kw).collect()
+        )
+        assert inrow == floop  # bit-equal rows (Row == compares values)
+        return df, inrow
+
+    df, inrow = both(counts)
     auto = sorted(mining.stationary_distribution(df, **kw).collect())
-    assert inrow == floop == auto  # bit-equal rows (Row == compares values)
+    assert inrow == auto
     # auto-dispatch picks the frame-loop when the domain exceeds the bound
     tiny = sorted(
         mining.stationary_distribution(df, max_inrow_states=2, **kw).collect()
     )
-    assert tiny == floop
+    assert tiny == inrow
+    assert both([])[1] == []
+    assert [tuple(r) for r in both([(3, 3, 7)])[1]] == [(3, 1.0, 0.0)]
 
 
 def test_term_burstiness_hand_case(spark):

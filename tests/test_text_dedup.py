@@ -57,6 +57,33 @@ def test_ngram_jaccard_identical_docs(spark):
     assert (pairs[0]["id_a"], pairs[0]["id_b"], pairs[0]["jaccard"]) == (0, 1, 1.0)
 
 
+def test_ngram_jaccard_tokenizes_after_the_repartition(spark):
+    """The shingle map runs once, on the parallel side of the
+    round-robin repartition: nothing below that exchange tokenizes. A
+    non-empty filter on the shingle array (an explicit one, or the one
+    Catalyst infers for a plain explode) is pushed into the scan stage,
+    where one task builds every shingle array before the parallel
+    tasks build them again."""
+    import re
+
+    texts = ["a b c d e f", "a b c d e g", "x y", "", "p q r s t u v"]
+    rdd = spark.sparkContext.parallelize(list(enumerate(texts)), 1)
+    df = spark.createDataFrame(rdd, "doc_id long, text string")
+    pairs = dedup.ngram_jaccard_pairs(df, text_col="text", id_col="doc_id", threshold=0.3)
+    assert sorted(tuple(r) for r in pairs.collect()) == [(0, 1, 0.6)]
+    lines = pairs._jdf.queryExecution().executedPlan().toString().splitlines()
+    depth = [re.match(r"[ :+-]*", ln).end() for ln in lines]
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange RoundRobinPartitioning" in ln]
+    assert exchanges
+    for i in exchanges:
+        below = []
+        for ln, d in zip(lines[i + 1 :], depth[i + 1 :]):
+            if d <= depth[i]:
+                break
+            below.append(ln)
+        assert below and not [ln for ln in below if "regexp_replace" in ln]
+
+
 def test_simhash_locality(spark):
     base = "the quick brown fox jumps over the lazy dog " * 5
     edited = base + "extra token"

@@ -190,7 +190,7 @@ NOTES = {
     "q154_frequent_pairs": "downward-closure prune (frequent items first) bounds the per-basket explode; pair counts map-side combine",
     "q265_zone_map_audit": "distinct-key two-phase rank (range exchange) + exact integer file bucketing; audit collapses to ONE row — no physical-order dependence",
     "q266_compaction_plan": "per-partition NF-decreasing fold as ONE in-row F.aggregate (two-integer state); file frame bounded at 256/partition by construction",
-    "q267_stationary_markov": "domain-sized transition matrix collected to ONE row (window totals, no totals join); all 8 power rounds are one in-row F.aggregate fold (r13) — zero per-round shuffles, values bit-identical to the frame loop",
+    "q267_stationary_markov": "domain-sized transition matrix collected to ONE row, out-degree totals summed in that row (no window, no totals join); all 8 power rounds are one in-row aggregate fold written as SQL text — zero per-round shuffles, values bit-identical to the frame loop",
     "q268_term_burstiness": "exact integer (df, S1, S2) per term in one combinable agg; VMR + deterministic top-50 on the #terms frame",
     "q269_mutual_nn_rule": "width rule pins block population ~32: bucket equi-self-join stays per-block quadratic only; struct-max best edge + one mutuality self-join",
     "q270_local_clustering": "degree-ordered orientation caps apex fan-out at O(sqrt(E)); triangles explode to 3 member rows, counts map-side combine, TakeOrdered(100)",

@@ -8,7 +8,11 @@ times the full result through a ``noop`` sink, and records:
   overhead dominated (sched canary ≈ 0.1 s/job), so job count is the
   first-order cost model,
 - the number of stages across those jobs (each extra stage ≈ one
-  shuffle boundary or retry).
+  shuffle boundary or retry),
+- the build: wall seconds to construct the DataFrame, the jobs it
+  launched, and their summed wall seconds. Build time that no job
+  explains is driver-side work (py4j expression building, analysis)
+  that the job count cannot see.
 
 The action is bench.py's ``force`` (a ``noop`` write) in both the
 warm-up and the timed passes, so the job counts come from the plan a
@@ -28,6 +32,19 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import force  # noqa: E402
+
+
+def job_wall_s(sc, job_ids) -> float:
+    """Summed submission-to-completion seconds of finished jobs, read
+    from the driver's status store (kept with the UI off)."""
+    store = sc._jsc.sc().statusStore()
+    total_ms = 0
+    for jid in job_ids:
+        job = store.job(jid)
+        sub, done = job.submissionTime(), job.completionTime()
+        if sub.isDefined() and done.isDefined():
+            total_ms += done.get().getTime() - sub.get().getTime()
+    return total_ms / 1000
 
 
 def main() -> None:
@@ -86,9 +103,14 @@ def main() -> None:
             group = f"prof_{n}_{p}"
             sc.setJobGroup(group, n)
             t0 = time.perf_counter()
-            force(qs[n](spark, sf_dir))
+            df = qs[n](spark, sf_dir)
+            build_s = time.perf_counter() - t0
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            build_ids = tracker.getJobIdsForGroup(group)
+            force(df)
             dt = time.perf_counter() - t0
             sc.setJobGroup(None, None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
             job_ids = tracker.getJobIdsForGroup(group)
             n_stages = 0
             for jid in job_ids:
@@ -100,6 +122,9 @@ def main() -> None:
                 "wall": round(dt, 3),
                 "jobs": len(job_ids),
                 "stages": n_stages,
+                "build_s": round(build_s, 3),
+                "build_jobs": len(build_ids),
+                "build_job_s": round(job_wall_s(sc, build_ids), 3),
             }
             if best is None or rec["wall"] < best["wall"]:
                 best = rec
@@ -107,9 +132,12 @@ def main() -> None:
         print(json.dumps(best), flush=True)
 
     rows.sort(key=lambda r: -r["wall"])
-    print(f"\n{'wall':>7} {'jobs':>5} {'stages':>7}  query")
+    print(f"\n{'wall':>7} {'jobs':>5} {'stages':>7} {'build':>7} {'b.jobs':>6} {'b.job_s':>7}  query")
     for r in rows:
-        print(f"{r['wall']:7.3f} {r['jobs']:5d} {r['stages']:7d}  {r['q']}")
+        print(
+            f"{r['wall']:7.3f} {r['jobs']:5d} {r['stages']:7d} {r['build_s']:7.3f}"
+            f" {r['build_jobs']:6d} {r['build_job_s']:7.3f}  {r['q']}"
+        )
     print(
         f"\ntotal {sum(r['wall'] for r in rows):.1f}s over {len(rows)} queries; "
         f"jobs {sum(r['jobs'] for r in rows)}, stages {sum(r['stages'] for r in rows)}"

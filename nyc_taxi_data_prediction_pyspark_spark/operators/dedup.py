@@ -910,7 +910,7 @@ def duplicate_span_coverage(
     Returns (id, n_tokens, n_spans, n_dup_spans, covered_tokens,
     dup_coverage) — dup_coverage one IEEE division, NULL-free."""
     from ..functions.hashing import md5_int60
-    from .text import normalize_sql, normalize_text
+    from .text import normalize_text
 
     toks = F.split(normalize_text(text_col), " ")
     base = (

@@ -977,10 +977,10 @@ def stationary_distribution(
     shuffles/jobs where the frame-loop form paid a join + aggregation
     + checkpoint per round (measured 35+ Spark jobs on q267/q287; the
     q239 isotonic in-row precedent).  The in-row work is one task's:
-    O(#edges²) for the totals and O(#states² × #edges) per round (each
-    edge looks its source up in the state array by linear scan) —
-    microseconds at q267's 5 states and 25 edges.  The fold is written
-    as SQL text, so building it is a handful of py4j calls instead of
+    O(#states × #edges) for the totals and O(#states² × #edges) per
+    round (each edge looks its source up in the state array by linear
+    scan) — microseconds at q267's 5 states and 25 edges.  The fold is
+    written as SQL text, so building it is a handful of py4j calls instead of
     the ~2000 its Python-lambda form made (0.3-0.4 s of driver time
     per build that launched no job).  Per-term arithmetic is UNCHANGED
     (same dec-quantized products, exact decimal sums — order-free, so
@@ -1028,23 +1028,22 @@ def stationary_distribution(
     # |value| < 10^19 (pi ≤ 1) — a (38,18) accumulator would type its
     # additions (38,17), silently rounding the last scale digit away
     # from the distributed DECIMAL(38,18) sum it must reproduce
-    # accumulator precision 37: (37,18)+(37,18) → (38,18) keeps scale
-    # 18 exactly, and the cast back to (37,18) is the identity for
-    # |value| < 10^19 (pi ≤ 1) — a (38,18) accumulator would type its
-    # additions (38,17), silently rounding the last scale digit away
-    # from the distributed DECIMAL(38,18) sum it must reproduce
     dec = "decimal(37,18)"
     e = transitions.select(
         F.col(from_col).alias("__i"),
         F.col(to_col).alias("__j"),
         F.col(count_col).cast("bigint").alias("__n"),
     )
-    # __p = n_ij / tot_i with tot_i summed in-row over the collected
-    # edges, not by a window: one Exchange fewer
+    # __p = n_ij / tot_i with tot_i summed in-row over the source's own
+    # edges, not by a window: one Exchange fewer. The edges are grouped
+    # per source first (a lambda variable, so each group is built once;
+    # a projected totals column would be inlined into the per-edge
+    # lambda by CollapseProject): O(#states × #edges) in all.
     row = e.agg(F.expr("array_sort(collect_list(struct(__i, __j, __n))) AS en")).selectExpr(
-        "transform(en, ed -> named_struct('__i', ed.__i, '__j', ed.__j, '__p',"
-        " CAST(ed.__n AS DOUBLE)"
-        " / CAST(aggregate(en, 0L, (t, f) -> t + IF(f.__i = ed.__i, f.__n, 0L)) AS DOUBLE))) AS es",
+        "flatten(transform(transform(array_distinct(transform(en, f -> f.__i)),"
+        " s -> filter(en, f -> f.__i = s)),"
+        " g -> transform(g, ed -> named_struct('__i', ed.__i, '__j', ed.__j, '__p',"
+        " CAST(ed.__n AS DOUBLE) / CAST(aggregate(g, 0L, (t, f) -> t + f.__n) AS DOUBLE))))) AS es",
         "array_sort(array_distinct(concat(transform(en, ed -> ed.__i), transform(en, ed -> ed.__j)))) AS sts",
     )
     # 1-based position of a state in sts (#states-bounded scan)

@@ -102,9 +102,11 @@ def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "pred_lang") -
 
 def normalize_text(text: Column | str) -> Column:
     """Canonical form for fingerprinting/dedup: lowercase, collapse
-    whitespace, trim."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.trim(F.regexp_replace(F.lower(c), WORD_SPLIT, " "))
+    whitespace, trim. A column name is normalized by the SQL text of
+    ``normalize_sql`` (one py4j call)."""
+    if isinstance(text, str):
+        return F.expr(normalize_sql(text))
+    return F.trim(F.regexp_replace(F.lower(text), WORD_SPLIT, " "))
 
 
 def normalize_sql(text_col: str) -> str:
